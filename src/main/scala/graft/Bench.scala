@@ -243,7 +243,7 @@ object Bench {
     // unpersist removes every cache block synchronously — getPersistentRDDs
     // is the authoritative registry, and unpersist(blocking=true) returns
     // only after the BlockManager dropped the blocks — so each measurement
-    // starts against an empty block store, like a standalone QTime rep.
+    // starts against an empty block store, like a standalone NoopTime rep.
     // guarded: hygiene must never kill the loop — the report (with its
     // per-query failures) must still be emitted on a broken session
     def hygiene(): Unit =
@@ -263,8 +263,8 @@ object Bench {
     // parallelism echo plus, per lane, Σ task-time / noop-wall (a lane
     // using one core reads ~1; a 32-wide CPU-bound lane reads ≫ 1). The
     // listener only ACCUMULATES during the gated noop pass; events are
-    // drained (private listenerBus via reflection, dev-grade but fail-safe)
-    // before each snapshot so a pass cannot bleed into the next.
+    // drained (GraftSession.drainListenerBus) before each snapshot so a
+    // pass cannot bleed into the next.
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -273,14 +273,6 @@ object Bench {
           if (t.taskMetrics != null)
             taskTimeMs.addAndGet(t.taskMetrics.executorRunTime)
       })
-    def drainListeners(): Unit =
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethods.find(m =>
-          m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .foreach(_.invoke(bus))
-      } catch { case _: Throwable => Thread.sleep(300) }
     val noopTaskSec = scala.collection.mutable.LinkedHashMap[String, Double]()
     // Local-iteration knob only (driver never sets it): comma-separated
     // lane-name prefixes restrict the run, e.g. SPARK_GRAFT_ONLY=q20,q24
@@ -294,7 +286,7 @@ object Bench {
       // pre-compile 100+ distinct plans), which is one-time cost a
       // long-lived deployment never re-pays — BASELINE.md targets are
       // steady-state. Round-5 measurement: one-shot in-loop numbers ran
-      // 1.4-2x a standalone warm QTime rep purely from in-region
+      // 1.4-2x a standalone warm NoopTime rep purely from in-region
       // compilation; the block-debris fix alone did not close that. The
       // cold pass rides along in queries_cold for transparency.
       def once(into: scala.collection.mutable.LinkedHashSet[String]): Double = {
@@ -330,7 +322,7 @@ object Bench {
       // fully materialized (pre-barrier). `queries` stays the historical
       // count-based contract (round-over-round comparability);
       // `queries_noop` is the every-column truth the Verify gate pays.
-      drainListeners()
+      GraftSession.drainListenerBus(spark)
       val taskMs0 = taskTimeMs.get()
       val tN = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -339,7 +331,7 @@ object Bench {
         System.err.println(s"[bench] $name noop FAILED: ${e.getMessage}")
       }
       noopTimes(name) = (System.nanoTime() - tN) / 1e9
-      drainListeners()
+      GraftSession.drainListenerBus(spark)
       noopTaskSec(name) = (taskTimeMs.get() - taskMs0) / 1e3
       hygiene()
       name -> warm

@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** ONE definition of the session configuration every graft entry point
-  * shares — Verify, Bench, Explain, QTime and the CLI previously each
+  * shares — Verify, Bench, Explain, the tool mains and the CLI previously each
   * repeated the same five conf lines, and a conf dropped from one of them
   * (e.g. `nanosAsLong`, required before any `events.parquet` scan) is the
   * kind of drift a round-2 review actually had to chase. Extras that are
@@ -21,9 +22,11 @@ import org.apache.spark.sql.SparkSession
   *    `Tables.normalizeEventTs` accepts either storage generation.
   *  - `outputTimestampType=TIMESTAMP_MICROS`: written parquet carries the
   *    same unit DuckDB reads, keeping the oracle compare unit-exact.
-  *  - [[graft.functions.GraftExtensions]] injects the custom expressions
-  *    (dotf, the minhash sketch aggregates) so plain `spark.sql` sees them
-  *    with no imperative register call.
+  *  - [[graft.functions.GraftExtensions]] injects every custom function
+  *    of [[graft.functions.GraftFunctions.all]] (dotf, the minhash sketch
+  *    aggregates, …). It is the only registration path: a session built
+  *    elsewhere must carry the extension too
+  *    (`--conf spark.sql.extensions=graft.functions.GraftExtensions`).
   */
 object GraftSession {
   def builder(cpus: String): SparkSession.Builder = {
@@ -65,7 +68,7 @@ object GraftSession {
     // SPARK_GRAFT_NO_BROADCAST=1: the at-scale join-shape preview — with
     // test-SF inputs every join side fits under the broadcast threshold,
     // which hides the SMJ/shuffle structure a 100 TB run would use.
-    // Honored by EVERY entry point (Bench, Verify, QTime, Explain,
+    // Honored by EVERY entry point (Bench, Verify, NoopTime, Explain,
     // JoinShapes) so the full lane set can be run and benched in the
     // degraded-shape configuration (r9 audit). Explicit broadcast() hints
     // are unaffected by design — they mark sides bounded by construction.
@@ -84,12 +87,18 @@ object GraftSession {
   }
 
   /** SQL-first entry: register every testdata table of `dir` as a temp
-    * view (events through its nanos→micros normalization) plus all custom
-    * functions, so a user can drive the whole engine from `spark.sql(...)`
-    * — the shape a Snowflake-SQL user of the reference would reach for
-    * first. Idempotent; returns the same session for chaining. */
+    * view (events through its nanos→micros normalization), so a user can
+    * drive the whole engine from `spark.sql(...)` — the shape a
+    * Snowflake-SQL user of the reference would reach for first. The custom
+    * functions come from [[graft.functions.GraftExtensions]], which the
+    * session must carry; without it this fails here rather than with
+    * UNRESOLVED_ROUTINE at the first query. Idempotent; returns the same
+    * session for chaining. */
   def openSql(spark: SparkSession, dir: String): SparkSession = {
-    graft.functions.GraftFunctions.register(spark)
+    require(spark.catalog.functionExists("dotf"),
+      "graft functions are not registered on this session: build it with " +
+        "withExtensions(new graft.functions.GraftExtensions) or " +
+        "--conf spark.sql.extensions=graft.functions.GraftExtensions")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { t =>
       graft.core.Tables.table(spark, dir, t).createOrReplaceTempView(t)
@@ -131,5 +140,34 @@ object GraftSession {
     spark.catalog.clearCache()
     cached.foreach(_.unpersist(blocking = true))
     cached.size
+  }
+
+  /** Block until every listener event posted so far has been delivered, so
+    * a metrics snapshot taken next cannot miss a straggler event. The bus
+    * is `private[spark]`, hence reflection. A non-fatal failure (say, a
+    * Spark version without the method) falls back to a fixed 500 ms sleep;
+    * a fatal error propagates, and an interrupt is re-raised with the
+    * thread's interrupt flag set. */
+  def drainListenerBus(spark: SparkSession): Unit = {
+    val failure =
+      try {
+        val sc = spark.sparkContext
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethods.find(m =>
+          m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
+          .foreach(_.invoke(bus))
+        None
+      } catch {
+        // reflection wraps whatever the drain itself threw
+        case e: java.lang.reflect.InvocationTargetException => Some(e.getCause)
+        case NonFatal(e) => Some(e)
+      }
+    failure.foreach {
+      case e: InterruptedException =>
+        Thread.currentThread().interrupt()
+        throw e
+      case NonFatal(_) => Thread.sleep(500)
+      case e => throw e
+    }
   }
 }

@@ -176,9 +176,16 @@ object Main {
       authToken = conf.authToken, tableOptions = opts)
   }
 
+  /** Push every JSON document under `<landing>/<specifier>`. The lookup is
+    * recursive: the reference lands files hour-partitioned as
+    * `{specifier}/{YYYY}/{MM}/{DD}/{HH}/` (`CommCareAPIHandler.py:275-277`),
+    * and those plain-named directories are not `key=value` partitions that
+    * Spark's default listing would resolve. A flat `{specifier}/` of files
+    * reads the same either way. */
   def runPush(spark: SparkSession, conf: JobConf, specifier: String,
               method: String = "POST", token: Option[String] = None): Unit = {
-    val df = spark.read.json(s"${conf.landingDir}/$specifier")
+    val df = spark.read.option("recursiveFileLookup", "true")
+      .json(s"${conf.landingDir}/$specifier")
       .selectExpr("to_json(struct(*)) AS doc")
     // `case`-shaped pushes log each record's form_id
     // (`CommCareAPIHandler.py:303-304` via const.py:1) — observability

@@ -83,6 +83,19 @@ object KCore {
     * count equals the previous round's (the same monotonicity argument),
     * `converged` = that equality at exit. Emits (node, deg, converged)
     * for the final survivor set. */
+  /** Largest edge count the single-task arrays can hold (the JVM's
+    * practical array-length limit). */
+  private[graft] val MaxTaskEdges: Int = Int.MaxValue - 8
+
+  /** Next capacity of the single-task edge arrays once `m` are full:
+    * double, computed in Long so it cannot wrap negative past 2^30 edges
+    * (`gateEdges` is caller-settable), capped at [[MaxTaskEdges]]. */
+  private[graft] def grownCapacity(m: Int): Int = {
+    require(m < MaxTaskEdges, s"k-core single-task path: a partition holds more than " +
+      s"$MaxTaskEdges edges; lower gateEdges so the distributed path runs")
+    math.min(MaxTaskEdges.toLong, 2L * m).toInt
+  }
+
   private def singleTask(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -106,8 +119,9 @@ object KCore {
         while (it.hasNext) {
           val e = it.next()
           if (m == ai.length) {
-            ai = java.util.Arrays.copyOf(ai, m << 1)
-            bi = java.util.Arrays.copyOf(bi, m << 1)
+            val cap = grownCapacity(m)
+            ai = java.util.Arrays.copyOf(ai, cap)
+            bi = java.util.Arrays.copyOf(bi, cap)
           }
           ai(m) = id(e._1); bi(m) = id(e._2); m += 1
         }

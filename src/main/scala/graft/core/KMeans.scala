@@ -38,8 +38,9 @@ object KMeans {
   }
 
   /** `argmin_k ‖x − c_k‖²` as a Column, via the augmented-dimension trick
-    * over the codegen'd `nearest_centroid` (which must be registered —
-    * `GraftFunctions.register`). Ids are the centroid indices 0..k−1. */
+    * over the codegen'd `nearest_centroid` (injected by
+    * [[graft.functions.GraftExtensions]], which the session must carry).
+    * Ids are the centroid indices 0..k−1. */
   def euclidAssign(vec: Column, cents: IndexedSeq[Array[Double]]): Column = {
     val ids = cents.indices.map(_.toLong)
     val aug = cents.map { c =>

@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain,
+  Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -80,14 +83,16 @@ case class DotF(left: Expression, right: Expression) extends BinaryExpression {
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-scoped registration of graft's custom Catalyst expressions. */
+/** The table of graft's custom SQL functions: one `(name, expression
+  * class, builder)` entry per function. [[GraftExtensions]] injects every
+  * entry into each session it is applied to — the only way these functions
+  * get registered. */
 object GraftFunctions {
   /** Arity-validated bloom_agg builder mirroring Spark's own
     * bloom_filter_agg forms: 1 arg (defaults), 2 (estimated items),
     * 3 (+ num bits). A wrong-arity call gets a clear invalid-arguments
     * error instead of an IndexOutOfBoundsException from `exprs(2)`. */
   private[functions] def bloomAgg(exprs: Seq[Expression]): Expression = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     val agg = exprs match {
       case Seq(c)       => new BloomFilterAggregate(c)
       case Seq(c, n)    => new BloomFilterAggregate(c, n)
@@ -100,86 +105,63 @@ object GraftFunctions {
 
   /** 1-arg (raw 60-bit) and 2-arg (reduced mod m) forms. */
   private[functions] def hash60Arr(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(a) => Hash60Arr(a,
-      org.apache.spark.sql.catalyst.expressions.Literal(Hash60Arr.NoMod))
+    case Seq(a) => Hash60Arr(a, Literal(Hash60Arr.NoMod))
     case Seq(a, m) => Hash60Arr(a, m)
     case _ => throw new IllegalArgumentException(
       s"hash60_arr expects 1 or 2 arguments (array[, modulus]), got ${exprs.length}")
   }
 
   private[functions] def bloomContains(exprs: Seq[Expression]): Expression = exprs match {
-    case Seq(bloom, value) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bloom, value)
+    case Seq(bloom, value) => BloomFilterMightContain(bloom, value)
     case _ => throw new IllegalArgumentException(
       s"bloom_contains expects exactly 2 arguments (bloom, value), got ${exprs.length}")
   }
 
-  /** Idempotent: createOrReplaceTempFunction overwrites in place. Registers
-    * the WHOLE custom surface (dotf + both minhash sketch aggregates) so a
-    * caller never sees a session with half the functions. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dotf", exprs => DotF(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash12", exprs => MinHashSig(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pair_expand", exprs => PairExpand(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pair_expand_ids", exprs => PairExpandIds(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "collect_capped",
-      exprs => CollectCapped(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_hashes", exprs => SpanHashes(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash60_arr", exprs => GraftFunctions.hash60Arr(exprs), "built-in")
+  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dotf", classOf[DotF], e => DotF(e(0), e(1))),
+    ("minhash12", classOf[MinHashSig], e => MinHashSig(e.head)),
+    ("simhash60", classOf[SimHash60], e => SimHash60(e.head)),
+    ("pair_expand", classOf[PairExpand], e => PairExpand(e(0), e(1))),
+    ("pair_expand_ids", classOf[PairExpandIds], e => PairExpandIds(e.head)),
+    ("collect_capped", classOf[CollectCapped],
+      e => CollectCapped(e(0), e(1)).toAggregateExpression()),
+    ("span_hashes", classOf[SpanHashes], e => SpanHashes(e(0), e(1))),
+    ("hash60_arr", classOf[Hash60Arr], hash60Arr),
+    ("minhash_sketch", classOf[MinHashSketch],
+      e => MinHashSketch(e.head).toAggregateExpression()),
+    ("minhash_sketch_merge", classOf[MinHashSketchMerge],
+      e => MinHashSketchMerge(e.head).toAggregateExpression()),
     // Stock Catalyst bloom expressions (the machinery behind Spark's own
     // runtime row-level filtering), surfaced as callable functions so a
     // query can build an explicit broadcast-prefilter plan: `bloom_agg`
     // collapses a huge key set to one binary bitset row; `bloom_contains`
     // probes it row-local (bloom side must be foldable or a scalar
     // subquery — BloomFilterMightContain.checkInputDataTypes enforces it).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg", exprs => GraftFunctions.bloomAgg(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains", exprs => GraftFunctions.bloomContains(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nearest_centroid", exprs => NearestCentroid.fromExprs(exprs), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_avg", exprs => VecAvg(exprs.head).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", exprs => DeflateLen(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tokenize_pos", exprs => TokenizePos(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_sketch",
-      exprs => FreqSketch(exprs(0), exprs(1)).toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmin2",
-      exprs => ArgExtremum(exprs(0), exprs(1), exprs(2), findMin = true)
-        .toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax2",
-      exprs => ArgExtremum(exprs(0), exprs(1), exprs(2), findMin = false)
-        .toAggregateExpression(), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pack_sorted_longs", exprs => PackSortedLongs(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_packed",
-      exprs => IntersectPackedLongs(exprs(0), exprs(1)), "built-in")
-    MinHashSketch.register(spark)
-  }
+    ("bloom_agg", classOf[BloomFilterAggregate], bloomAgg),
+    ("bloom_contains", classOf[BloomFilterMightContain], bloomContains),
+    ("nearest_centroid", classOf[NearestCentroid], NearestCentroid.fromExprs),
+    ("vec_avg", classOf[VecAvg], e => VecAvg(e.head).toAggregateExpression()),
+    ("deflate_len", classOf[DeflateLen], e => DeflateLen(e.head)),
+    ("tokenize_pos", classOf[TokenizePos], e => TokenizePos(e.head)),
+    ("freq_sketch", classOf[FreqSketch],
+      e => FreqSketch(e(0), e(1)).toAggregateExpression()),
+    ("argmin2", classOf[ArgExtremum],
+      e => ArgExtremum(e(0), e(1), e(2), findMin = true).toAggregateExpression()),
+    ("argmax2", classOf[ArgExtremum],
+      e => ArgExtremum(e(0), e(1), e(2), findMin = false).toAggregateExpression()),
+    ("pack_sorted_longs", classOf[PackSortedLongs], e => PackSortedLongs(e.head)),
+    ("intersect_packed", classOf[IntersectPackedLongs],
+      e => IntersectPackedLongs(e(0), e(1))))
 }
 
-/** `SparkSessionExtensions` hook — the deployment-grade registration path:
+/** `SparkSessionExtensions` hook — the one registration path for graft's
+  * custom functions:
   * {{{
   *   SparkSession.builder().withExtensions(new GraftExtensions)  // code
   *   --conf spark.sql.extensions=graft.functions.GraftExtensions // submit
   * }}}
-  * makes `dotf` available to every session (including pure `spark.sql`)
-  * without any imperative register call. Two optimizer rules are injected —
+  * makes every [[GraftFunctions.all]] entry available to every session
+  * (including pure `spark.sql`). Two optimizer rules are injected —
   * [[graft.plans.ApproxDistinctRule]], the conf-gated (default OFF)
   * COUNT(DISTINCT)→HLL policy rewrite, and [[TryCastFastPathRule]], the
   * conf-gated (default ON, semantics-identical) non-throwing TRY_CAST
@@ -187,10 +169,8 @@ object GraftFunctions {
   * plans through stock Catalyst (SURVEY §4), expressions being the only
   * other custom Catalyst artifacts on the default path.
   */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(e: SparkSessionExtensions): Unit = {
     // the injectOptimizerRule leg: the opt-in COUNT(DISTINCT)->HLL policy
     // rewrite (graft.plans.ApproxDistinctRule; default OFF, conf-gated)
     e.injectOptimizerRule(_ => new graft.plans.ApproxDistinctRule)
@@ -205,116 +185,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     // the injectParser leg: the GRAFT VACUUM VERSIONS maintenance command
     // (graft.plans.GraftSqlParser; everything else delegates verbatim)
     e.injectParser((_, parser) => new graft.plans.GraftSqlParser(parser))
-    e.injectFunction((
-      FunctionIdentifier("dotf"),
-      new ExpressionInfo(classOf[DotF].getName, "dotf"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotF(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("minhash12"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash12"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSig(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[SimHash60].getName, "simhash60"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHash60(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("pair_expand"),
-      new ExpressionInfo(classOf[PairExpand].getName, "pair_expand"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PairExpand(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("pair_expand_ids"),
-      new ExpressionInfo(classOf[PairExpandIds].getName, "pair_expand_ids"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PairExpandIds(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("collect_capped"),
-      new ExpressionInfo(classOf[CollectCapped].getName, "collect_capped"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CollectCapped(exprs(0), exprs(1)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("span_hashes"),
-      new ExpressionInfo(classOf[SpanHashes].getName, "span_hashes"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SpanHashes(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("hash60_arr"),
-      new ExpressionInfo(classOf[Hash60Arr].getName, "hash60_arr"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.hash60Arr(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sketch"),
-      new ExpressionInfo(classOf[MinHashSketch].getName, "minhash_sketch"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSketch(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("minhash_sketch_merge"),
-      new ExpressionInfo(classOf[MinHashSketchMerge].getName, "minhash_sketch_merge"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashSketchMerge(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "bloom_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.bloomAgg(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "bloom_contains"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.bloomContains(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "nearest_centroid"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        NearestCentroid.fromExprs(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("vec_avg"),
-      new ExpressionInfo(classOf[VecAvg].getName, "vec_avg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VecAvg(exprs.head).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[DeflateLen].getName, "deflate_len"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DeflateLen(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("tokenize_pos"),
-      new ExpressionInfo(classOf[TokenizePos].getName, "tokenize_pos"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        TokenizePos(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("freq_sketch"),
-      new ExpressionInfo(classOf[FreqSketch].getName, "freq_sketch"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FreqSketch(exprs(0), exprs(1)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("argmin2"),
-      new ExpressionInfo(classOf[ArgExtremum].getName, "argmin2"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ArgExtremum(exprs(0), exprs(1), exprs(2), findMin = true)
-          .toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("argmax2"),
-      new ExpressionInfo(classOf[ArgExtremum].getName, "argmax2"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        ArgExtremum(exprs(0), exprs(1), exprs(2), findMin = false)
-          .toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("pack_sorted_longs"),
-      new ExpressionInfo(classOf[PackSortedLongs].getName, "pack_sorted_longs"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PackSortedLongs(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("intersect_packed"),
-      new ExpressionInfo(classOf[IntersectPackedLongs].getName, "intersect_packed"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        IntersectPackedLongs(exprs(0), exprs(1))))
+    GraftFunctions.all.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.ByteBuffer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -134,17 +133,4 @@ case class MinHashSketchMerge(
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): MinHashSketchMerge =
     copy(child = newChildren.head)
-}
-
-object MinHashSketch {
-  /** Register alongside dotf (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sketch", exprs => MinHashSketch(exprs.head).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sketch_merge",
-      exprs => MinHashSketchMerge(exprs.head).toAggregateExpression(),
-      "built-in")
-  }
 }

@@ -492,7 +492,6 @@ object Analytics {
     count(lit(1)).as("n"))
 
   def q43Ohlc(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val aggs = ohlcAggs
     Tables.events(spark, dir)
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))

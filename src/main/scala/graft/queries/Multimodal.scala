@@ -715,7 +715,7 @@ object Multimodal {
       // lazy cache: both sides of the band self-join (and the distinct)
       // read this frame — without it the real codec encodes+decodes the
       // corpus once per side. Lane-level cache hygiene (Bench/Verify/
-      // QTime) drops it after the query, the repo convention.
+      // NoopTime) drops it after the query, the repo convention.
       .persist()
     // Hot-bucket routing (r11 128×-sweep fix): the previous plain band
     // self-join had NO viral-bucket path — at 128× one 16-bit band value

@@ -140,7 +140,6 @@ object Sampling {
   // bitset grows with the train vocabulary (size for n_distinct shingles,
   // still MBs for billions of items at moderate FP).
   def q33DecontamBloom(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Doc-level shingle frame, materialized ONCE (localCheckpoint). The
     // barrier is load-bearing twice over: (a) four consumers (bloom build,
     // test probe ×2 branches, train verify) read the md5-heavy shingle

@@ -160,7 +160,6 @@ object Similarity {
   private[graft] def splitHotBuckets(rows: DataFrame, keyCols: Seq[String],
                               cap: Int, persistInput: Boolean = true,
                               hotKeysByCount: Boolean = false): (DataFrame, DataFrame) = {
-    graft.functions.GraftFunctions.register(rows.sparkSession)
     val keys = keyCols.map(col)
     // Lazy cache: `rows` feeds the aggregation AND (when hot keys exist)
     // the semi probe + both salted-join sides — without it the hot branch
@@ -215,7 +214,7 @@ object Similarity {
     // `rows` reaches HotKeyCountGateBytes; below it, hot keys derive from
     // `grouped` — one shuffle, exchange reused between the cold branch and
     // the probe, no extra job (the r13 shape, measured fastest at 1×).
-    // Measured estimates (tools/StatsProbe, the 2-col basket projection):
+    // Measured estimates (PLANS.md Round 15 Task 3, 2-col basket projection):
     // sf0.1 ≈ 2.1 MiB, 32× ≈ 78 MiB, 128× ≈ 314 MiB — the 16 MiB gate has
     // ≥ 5× margin to both neighbors, flips to the protected path well
     // before the scale where the double final agg measured 2.6× the lane
@@ -268,7 +267,6 @@ object Similarity {
     * [[HotPostingCap]]. */
   private[graft] def q24JaccardPairsCapped(spark: SparkSession, dir: String,
                                            hotCap: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // persist(): CacheManager substitutes the cached fragment BEFORE the
     // optimizer runs, so this is the barrier that keeps the explode's
     // inferred size-filter from duplicating the split+3-gram projection
@@ -276,7 +274,7 @@ object Similarity {
     // adversarial hot path's semi probe reads the cache instead of
     // re-shingling. Chosen over localCheckpoint: the checkpoint's dedicated
     // materialization job measured ~0.5 s of pure overhead at sf0.1
-    // (PhaseProbe); persist populates inside the first consumer's job.
+    // (PLANS.md Round-5); persist populates inside the first consumer's job.
     val d = docsWithShingles(spark, dir).persist()
     // Raw postings stream: one row per (shingle, doc). NEVER collected into
     // per-shingle arrays before the hot/cold split — splitHotBuckets counts
@@ -378,7 +376,6 @@ object Similarity {
     // minhash12: ONE codegen'd pass over the base hashes; the sigSpark
     // SQL formulation (12 interpreted array_min(transform) walks) is kept
     // as the spec-checked reference formulation
-    graft.functions.GraftFunctions.register(d.sparkSession)
     d.withColumn("hs", expr(hsSpark))
       .withColumn("sig", expr("minhash12(hs)"))
   }
@@ -422,9 +419,6 @@ object Similarity {
   // the columnar signature path by construction (shared MinHashFamily),
   // and the oracle recomputes them as k plain min() aggregates.
   def q24LangSketch(spark: SparkSession, dir: String): DataFrame = {
-    // the FULL surface (minhash12 + the sketch aggregates) — registering
-    // only the aggregates left minhash12 unresolved on fresh sessions
-    graft.functions.GraftFunctions.register(spark)
     // via docsWithShingles: its ≥3-token filter is the shared short-doc
     // crash guard (and matches the oracle CTE's WHERE).
     // Two-level aggregation: the per-doc K-vector (`sig`) is computed in
@@ -697,7 +691,7 @@ object Similarity {
       .withColumn("nh", size(col("shh")))
       .persist()
 
-    // r15 key diet (the slowest-lane profiling, tools/ContainProbe): the
+    // r15 key diet (the slowest-lane profiling, PLANS.md Round 15 Task 2): the
     // candidate machinery used to shuffle the raw ~25-byte shingle STRINGS
     // through three exchanges (df groupBy, df join, prefix⋈postings join)
     // plus an md5-based 60-bit sort key — while every candidate is verified
@@ -958,7 +952,6 @@ object Similarity {
     * shuffle — bit-identical to [[simhashesAgg]] (duplicate tokens vote
     * per occurrence in both). */
   private def simhashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       // null-text docs are DROPPED — the aggregation formulation's exact
       // behavior (explode of a null token array emits no rows), so the two
@@ -1035,7 +1028,6 @@ object Similarity {
        |  i -> $a[i]::DOUBLE * $a[i]::DOUBLE)), (s, v) -> s + v)""".stripMargin
 
   def q25CosineTopk(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val probe = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("probe_vec"))
@@ -1072,7 +1064,6 @@ object Similarity {
   // Exact baseline (O(n²) within the corpus); the scale path is
   // q25_ann_bucket. TakeOrderedAndProject keeps the result tiny.
   def q25EmbedNearDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
     val a = e.select(col("vec_id").as("vec_a"), col("embedding").as("ea"), col("nrm").as("na"))
@@ -1157,7 +1148,6 @@ object Similarity {
     .reduce(_ + _)
 
   def q25AnnBucket(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // One driver-side count to size the bucketing (the same discipline as
     // the IVF lanes' driver-held quantizer): hp literals must exist at
     // plan time, and a count() scan is O(parquet footers).
@@ -1258,7 +1248,6 @@ object Similarity {
     * BROADCAST centroid table; the argmax rank-1 window collapses map-side
     * (WindowGroupLimit), so each vector crosses exactly one Exchange. */
   private def ivfAssigned(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val wAsgn = Window.partitionBy(col("vec_id")).orderBy(col("cos_c").desc, col("cid"))
     e.crossJoin(broadcast(ivfCentroids(e)))
@@ -1313,7 +1302,6 @@ object Similarity {
   }
 
   def q25IvfTopk(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     ivfProbeTopk(e, ivfCentroids(e), NProbe)
   }
@@ -1450,7 +1438,6 @@ object Similarity {
     * plan-build-time count() sizing K is one cheap corpus-cardinality scan
     * — the price of corpus-adaptive K, paid once per run. */
   def q25IvfScale(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val k = kForCorpus(e.count())
     // The centroid table is materialized ONCE to the driver (K rows,
@@ -1874,7 +1861,6 @@ object Similarity {
     // expression is safe even if the optimizer evaluates it before the
     // length filter (the round-3 short-row crash class with inferred
     // Generate filters cannot occur — no clamp gymnastics needed).
-    graft.functions.GraftFunctions.register(spark)
     // the twin window shuffles ONLY (doc_id, text) — no token arrays cross
     // the exchange or land in the cache; tokens are re-split for the REPS
     // alone (at 1× this is the difference between a ~free collapse and a
@@ -2209,7 +2195,6 @@ object Similarity {
       .reduce(_ + _)
 
   def q25PqAdc(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
     val db = e.filter(col("vec_id") >= PqNQ)
     val books = pqCodebooks(db)
@@ -2380,7 +2365,6 @@ object Similarity {
     * measurable at ANY corpus size for ~target² bounded work. The pair join
     * broadcasts one side: the sample is ≤ ~target rows by construction. */
   def q24JaccardSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = shingledFrame(hashSampled(Tables.documents(spark, dir), "doc_id", SampleTargetDocs))
       .select(col("doc_id"), col("lang"), col("sh"),
         // r15 (the q93 two-stage-verify discipline): a 64-bit hash twin of
@@ -2476,7 +2460,6 @@ object Similarity {
     * the random-hyperplane bucketing (q25_ann_bucket's annBucketCol — one
     * definition) co-buckets it — the ANN recall audit at any corpus size. */
   def q25EmbedSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // bucket definition sized to the FULL corpus (the production lane's
     // bucketing at this scale), evaluated on the sample only
     val hp = annHp(Tables.embeddings(spark, dir).count())

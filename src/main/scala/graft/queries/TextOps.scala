@@ -731,7 +731,6 @@ object TextOps {
   // DeflateLenSpec pins the semantics (repetitive ≫ prose ratio,
   // interpreted/codegen parity, determinism).
   def q23Compress(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         octet_length(col("text")).cast("long").as("n_bytes"), // UTF-8 bytes, matches what deflate saw
@@ -751,7 +750,6 @@ object TextOps {
   // (`substr(text, start_char+1, len(tok)) = tok`) is spec-pinned in
   // TokenizePosSpec; the oracle pins cross-engine offset agreement.
   def q23TokensPos(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .filter(col("doc_id") % 10 === 0)
       .select(col("doc_id"),

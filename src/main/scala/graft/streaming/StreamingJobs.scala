@@ -35,7 +35,6 @@ object StreamingJobs {
   def hourlyOhlc(events: DataFrame): DataFrame = {
     // ONE shared aggregate definition with the batch lane (custom
     // argmin2/argmax2 — see Analytics.ohlcAggs for why not min_by)
-    graft.functions.GraftFunctions.register(events.sparkSession)
     val aggs = graft.queries.Analytics.ohlcAggs
     events
       .withWatermark("ts", "10 minutes")

@@ -1,7 +1,7 @@
 package graft.tools
 
 /** Barrier-tax A/B (r12 VERDICT task 3): for each named lane, time the
-  * full lane (construction + count, the QTime shape) under each barrier
+  * full lane (construction + count) under each barrier
   * mechanism — localCheckpoint(true) vs persist() vs none — by flipping
   * the `graft.barrier.mode` override that every `Barrier.bounded` call
   * site honors. 4 reps per (lane, mode); rep0 discarded (codegen), median

@@ -63,17 +63,9 @@ object JobProbe {
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      // r16 ADVICE: drain the async listener bus instead of a fixed sleep,
-      // so straggler events cannot bleed into the next pass's stats.
-      // listenerBus is private[spark]; reflection keeps this dev tool out
-      // of the spark package namespace, with the old sleep as fallback.
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethods.find(m =>
-          m.getName == "waitUntilEmpty" && m.getParameterCount == 0)
-          .foreach(_.invoke(bus))
-      } catch { case _: Throwable => Thread.sleep(500) }
+      // drain the async listener bus so straggler events cannot bleed
+      // into the next pass's stats
+      graft.GraftSession.drainListenerBus(spark)
       println(f"[jobprobe] pass$p wall=$wall%.2f s ---------------------------")
       jobs.toSeq.sortBy(_._1).foreach { case (jid, (st, sids)) =>
         val dur = (jobEnd.getOrElse(jid, st) - st) / 1e3

@@ -3,9 +3,9 @@ package graft.tools
 /** Dev-only lane timer for the GATED bench metric: the full-materialization
   * noop sink (guide §1.4), cold + N warm passes per named lane, same
   * inter-pass hygiene as Bench (blocking cache drop + GC) so a pass never
-  * reads a predecessor's cache. LaneTime/QTime time collect()/count() —
-  * both let Catalyst prune columns the action does not need, which is NOT
-  * what BASELINE.md gates. Usage:
+  * reads a predecessor's cache. It is the repo's one lane timer: timing
+  * collect()/count() instead lets Catalyst prune columns the action does
+  * not need, which is NOT what BASELINE.md gates. Usage:
   *   SPARK_GRAFT_SF_DIR=… runMain graft.tools.NoopTime <lane>…
   */
 object NoopTime {

@@ -55,7 +55,6 @@ object ScaleSmoke {
       f"anchor_io_mbps=${graft.core.Calibration.measureIo()}%.0f")
     val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
 
     // SPARK_GRAFT_SCALE_REUSE=1: skip the corpus build when a previous run
     // already widened this copies× (big rehearsals chunk their lane lists

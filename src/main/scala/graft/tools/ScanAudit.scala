@@ -69,7 +69,6 @@ object ScanAudit {
     val threshold = if (args.nonEmpty) args(0).toInt else 3
     val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val report = audit(spark, sfDir, threshold)
     report.foreach { f =>
       println(f"[scanaudit] ${f.lane}%-28s max_scans=${f.maxScans}  (${f.tables})")

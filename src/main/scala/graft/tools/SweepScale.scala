@@ -29,7 +29,6 @@ object SweepScale {
       s"corpus $out missing — run ScaleSmoke with SPARK_GRAFT_SCALE_COPIES=$copies first")
     val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val only = args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
     val lanes = graft.SparkEntry.queries.toSeq.sortBy(_._1)

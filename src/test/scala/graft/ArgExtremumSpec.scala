@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** functions.ArgExtremum (`argmin2`/`argmax2`): the four-primitive-buffer
   * argmin that keeps HashAggregate where min_by(v, struct(...)) demotes to
@@ -27,7 +26,6 @@ class ArgExtremumSpec extends SparkSpec {
   }
 
   test("argmin2/argmax2 equal min_by/max_by over the struct ordinal") {
-    GraftFunctions.register(spark)
     val df = randDf(7, 5000, 37)
     val got = df.groupBy($"g")
       .agg(expr("argmin2(k1, k2, v)").as("lo"), expr("argmax2(k1, k2, v)").as("hi"))
@@ -40,7 +38,6 @@ class ArgExtremumSpec extends SparkSpec {
   }
 
   test("merge is partition-topology independent") {
-    GraftFunctions.register(spark)
     val df = randDf(11, 4000, 13)
     val ref = df.coalesce(1).groupBy($"g")
       .agg(expr("argmin2(k1, k2, v)").as("lo"))
@@ -54,7 +51,6 @@ class ArgExtremumSpec extends SparkSpec {
   }
 
   test("null ordinals/values are not candidates; all-null group is null") {
-    GraftFunctions.register(spark)
     val df = Seq[(Long, Option[Long], Option[Long], Option[Double])](
       (1L, Some(5L), Some(1L), Some(10.0)),
       (1L, Some(1L), Some(1L), None),       // best ordinal but null value → skip
@@ -69,7 +65,6 @@ class ArgExtremumSpec extends SparkSpec {
   }
 
   test("interpreted equals codegen") {
-    GraftFunctions.register(spark)
     val df = randDf(13, 2000, 11).persist()
     try {
       val fast = df.groupBy($"g").agg(expr("argmin2(k1, k2, v)").as("lo"))
@@ -83,7 +78,6 @@ class ArgExtremumSpec extends SparkSpec {
   }
 
   test("plan stays HashAggregate; the min_by struct twin demotes to SortAggregate") {
-    GraftFunctions.register(spark)
     val df = randDf(17, 100, 5)
     def physical(q: org.apache.spark.sql.DataFrame): String =
       q.queryExecution.executedPlan.toString

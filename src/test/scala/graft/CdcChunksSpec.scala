@@ -17,11 +17,6 @@ import graft.queries.TextOps
   */
 class CdcChunksSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.functions.GraftFunctions.register(spark)
-  }
-
   private def cdcOf(docs: DataFrame): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -107,6 +107,43 @@ class CliSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("runPush reads the reference's hour-partitioned landing layout " +
+    "({specifier}/YYYY/MM/DD/HH/, CommCareAPIHandler.py:275-277)") {
+    import java.net.InetSocketAddress
+    import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+    val landing = java.nio.file.Files.createTempDirectory("cli_nested").toString
+    val hours = Seq("2024/03/01/22", "2024/03/01/23", "2024/03/02/00")
+    val staged = hours.zipWithIndex.flatMap { case (h, hi) =>
+      val d = java.nio.file.Paths.get(landing, "alpha", h)
+      java.nio.file.Files.createDirectories(d)
+      val ids = (0 until 4).map(i => s"doc-$hi-$i")
+      java.nio.file.Files.write(d.resolve("part-0.json"),
+        ids.map(id => s"""{"id": "$id", "hour": "$h"}""").mkString("\n").getBytes("UTF-8"))
+      ids
+    }
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new InetSocketAddress(0), 0)
+    server.createContext("/api", new HttpHandler {
+      override def handle(ex: HttpExchange): Unit = {
+        bodies.add(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+        ex.sendResponseHeaders(200, -1); ex.close()
+      }
+    })
+    server.start()
+    try {
+      val conf = Main.parseConf(
+        s"""{"operation_type": "s3_to_cc", "landing_dir": "$landing",
+           | "endpoint": "http://localhost:${server.getAddress.getPort}/api",
+           | "specifiers": [{"name": "alpha"}]}""".stripMargin)
+      assert(Main.runPushAll(spark, conf) === Seq("alpha"))
+      val idRe = "\"id\":\"([^\"]+)\"".r
+      val pushed = bodies.toArray(Array.empty[String]).toSeq
+        .map(b => idRe.findFirstMatchIn(b).get.group(1))
+      // every staged doc exactly once: no hour dir skipped, none re-read
+      assert(pushed.sorted === staged.sorted)
+    } finally server.stop(0)
+  }
+
   test("R12 multi-table loop tolerates 3 failures, aborts on the 4th") {
     val c = Main.parseConf(confJson).copy(tables =
       (1 to 5).map(i => Main.TableConf(s"t$i", usesIndexedOn = true, 100)),

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** collect_capped(e, cap): exact per-key counts, complete payload lists
   * below the cap, hard truncation above it — across real shuffles (the
@@ -10,7 +9,6 @@ class CollectCappedSpec extends SparkSpec {
   import spark.implicits._
 
   test("under-cap groups: f equals count, ds equals collect_list as a multiset") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(23)
     val rows = (0 until 2000).map(_ => (s"k${rng.nextInt(50)}", rng.nextLong() % 1000))
     val df = rows.toDF("k", "v").repartition(13) // force partials + merges
@@ -29,7 +27,6 @@ class CollectCappedSpec extends SparkSpec {
   }
 
   test("over-cap groups: f stays exact while ds truncates at cap+1") {
-    GraftFunctions.register(spark)
     val df = (0 until 1000).map(i => ("hot", i.toLong))
       .toDF("k", "v").repartition(7)
       .select(col("k"), struct(col("v").as("doc_id")).as("e"))
@@ -40,7 +37,6 @@ class CollectCappedSpec extends SparkSpec {
   }
 
   test("null payloads count toward f but are not collected") {
-    GraftFunctions.register(spark)
     val df = Seq(("k", Some(1L)), ("k", None), ("k", Some(2L)))
       .toDF("k", "v")
       .select(col("k"),
@@ -52,7 +48,6 @@ class CollectCappedSpec extends SparkSpec {
   }
 
   test("cap must be a positive integer literal") {
-    GraftFunctions.register(spark)
     val df = Seq(("k", 1L)).toDF("k", "v")
       .select(col("k"), struct(col("v").as("doc_id")).as("e"))
     val e = intercept[Exception] {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{DeflateLen, GraftFunctions}
+import graft.functions.DeflateLen
 
 /** Semantics of the deflate compressibility signal: the ratio must
   * actually separate boilerplate from prose, the Expression must agree
@@ -11,7 +11,6 @@ class DeflateLenSpec extends SparkSpec {
   import spark.implicits._
 
   test("repetitive text compresses far harder than high-entropy text") {
-    GraftFunctions.register(spark)
     val rep = ("lorem ipsum " * 200).trim                 // boilerplate
     val rng = new scala.util.Random(42)
     val noisy = (0 until 400).map(_ => rng.nextPrintableChar()).mkString
@@ -25,7 +24,6 @@ class DeflateLenSpec extends SparkSpec {
   }
 
   test("interpreted path agrees with codegen; binary input; null propagates; deterministic") {
-    GraftFunctions.register(spark)
     val rows = Seq("", "a", "abab" * 50, "The quick brown fox. " * 7)
     def run(): Seq[Int] =
       rows.toDF("t").repartition(2)

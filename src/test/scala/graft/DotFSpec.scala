@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Unit spec for the custom codegen'd DotF expression: codegen and
   * interpreted paths agree with the higher-order-function formulation
@@ -10,7 +9,6 @@ class DotFSpec extends SparkSpec {
   import spark.implicits._
 
   test("dotf equals the aggregate/zip_with fold bit-exactly (float arrays)") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)),
       (Array(0.1f, -0.2f, 0.3f), Array(-0.4f, 0.5f, -0.6f)))
@@ -25,7 +23,6 @@ class DotFSpec extends SparkSpec {
   }
 
   test("dotf handles mixed float/double arrays and null propagation") {
-    GraftFunctions.register(spark)
     val df = Seq((Array(1.0f, 2.0f), Array(0.5, 0.25))).toDF("f", "d")
     assert(df.select(call_function("dotf", $"f", $"d")).as[Double].head === 1.0)
     val n = df.select(call_function("dotf", lit(null).cast("array<float>"), $"d").isNull)
@@ -34,7 +31,6 @@ class DotFSpec extends SparkSpec {
   }
 
   test("dotf rejects non-numeric-array inputs") {
-    GraftFunctions.register(spark)
     val df = Seq((Array("x"), Array(1.0))).toDF("s", "d")
     val e = intercept[Exception] {
       df.select(call_function("dotf", $"s", $"d")).collect()

@@ -15,11 +15,6 @@ import org.apache.spark.sql.functions._
   */
 class FreqSketchSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.functions.GraftFunctions.register(spark)
-  }
-
   /** Deterministic zipf-ish stream: item i appears ~N/i times. */
   private def stream(nDistinct: Int, scale: Int): Seq[String] =
     (1 to nDistinct).flatMap(i => Seq.fill(scale / i)(s"item$i"))

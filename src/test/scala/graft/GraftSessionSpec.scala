@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 
 /** The SQL-first entry point: after openSql a user drives the engine with
   * nothing but spark.sql — tables as views (events through its
-  * nanos→micros normalization) and the whole custom-function surface. */
+  * nanos→micros normalization) and the whole custom-function surface,
+  * which the session's GraftExtensions injected. */
 class GraftSessionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -47,5 +48,21 @@ class GraftSessionSpec extends SparkSpec {
       .groupBy($"l_returnflag").agg(sum($"l_quantity").cast("double").as("s"))
       .orderBy($"l_returnflag").as[(String, Double)].collect().toSeq
     assert(viaSql === viaDf)
+  }
+
+  test("drainListenerBus returns only after every posted event was delivered") {
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val slow = new org.apache.spark.scheduler.SparkListener {
+      override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        Thread.sleep(200)
+        seen.incrementAndGet()
+      }
+    }
+    spark.sparkContext.addSparkListener(slow)
+    try {
+      spark.range(10).count()
+      GraftSession.drainListenerBus(spark)
+      assert(seen.get() >= 1)
+    } finally spark.sparkContext.removeSparkListener(slow)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.queries.TextOps.h60
 
 /** hash60_arr must equal the transform/md5-hex SQL formulation it
@@ -11,7 +10,6 @@ class Hash60ArrSpec extends SparkSpec {
   import spark.implicits._
 
   test("raw and mod forms equal the SQL transform on adversarial strings") {
-    GraftFunctions.register(spark)
     val rows: Seq[Seq[String]] = Seq(
       Seq("a", "", "the quick", "ünïcødé ⚡", "的是在", "x" * 500),
       Seq(),
@@ -30,7 +28,6 @@ class Hash60ArrSpec extends SparkSpec {
   }
 
   test("null array yields null; null elements stay null (md5(NULL) parity)") {
-    GraftFunctions.register(spark)
     val df = Seq(Tuple1(Option.empty[Seq[String]])).toDF("arr")
     assert(df.select(expr("hash60_arr(arr)")).head().isNullAt(0))
     val withNullElem = spark.sql(
@@ -41,7 +38,6 @@ class Hash60ArrSpec extends SparkSpec {
   }
 
   test("wrong arity / bad modulus raise clear errors") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception](spark.sql("SELECT hash60_arr(array('a'), 0)").collect())
     assert(e.getMessage.contains("hash60_arr"))
   }

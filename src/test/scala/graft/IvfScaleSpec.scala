@@ -10,7 +10,6 @@ import graft.queries.Similarity
 class IvfScaleSpec extends SparkSpec {
 
   test("at-scale centroids ε-match the exact-mean quantizer at equal K") {
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.01")
     def asMap(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Double]] =
       df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toMap
@@ -36,7 +35,6 @@ class IvfScaleSpec extends SparkSpec {
   }
 
   test("q25_ivf_scale strands no cached RDDs (r8 fix held without persist)") {
-    graft.functions.GraftFunctions.register(spark)
     // drain caches persisted by OTHER lanes in this shared session (e.g.
     // the exact-mean quantizer's documented lazy persist) so the assertion
     // isolates what THIS lane leaves behind
@@ -47,7 +45,6 @@ class IvfScaleSpec extends SparkSpec {
   }
 
   test("nearest_centroid matches the cosine-argmax window formulation") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.01")
     val cents: Seq[(Long, Seq[Double])] =
@@ -75,7 +72,6 @@ class IvfScaleSpec extends SparkSpec {
   }
 
   test("vec_avg equals the per-dimension declarative mean") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     val e = graft.core.Tables.embeddings(spark, "/root/testdata/sf0.01")
       .withColumn("g", (col("vec_id") % 7).cast("long"))

@@ -103,4 +103,18 @@ class KCoreSpec extends SparkSpec {
         === dist.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet)
     }
   }
+
+  // The single-task edge arrays double when full. At m = 2^30 a plain
+  // `m << 1` wraps to Int.MinValue; the Long-computed growth must cap at
+  // the array limit instead, and refuse to grow past it. Pure arithmetic —
+  // nothing is allocated.
+  test("single-task edge-array growth cannot overflow past 2^30 edges") {
+    import graft.core.KCore.{MaxTaskEdges, grownCapacity}
+    assert(grownCapacity(1 << 12) === (1 << 13))
+    assert(grownCapacity(1 << 29) === (1 << 30))
+    assert(grownCapacity(1 << 30) === MaxTaskEdges)
+    assert(grownCapacity(MaxTaskEdges - 1) === MaxTaskEdges)
+    val e = intercept[IllegalArgumentException](grownCapacity(MaxTaskEdges))
+    assert(e.getMessage.contains("gateEdges"))
+  }
 }

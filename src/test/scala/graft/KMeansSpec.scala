@@ -15,11 +15,6 @@ import graft.core.KMeans
   */
 class KMeansSpec extends SparkSpec {
 
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    graft.functions.GraftFunctions.register(spark)
-  }
-
   private def vecsDF(rows: Seq[(Long, Array[Float])]) = {
     import spark.implicits._
     rows.toDF("vec_id", "embedding")

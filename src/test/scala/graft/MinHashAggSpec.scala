@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{MinHashFamily, MinHashSketch}
+import graft.functions.MinHashFamily
 
 /** The two imperative sketch aggregates and the columnar plain-min
   * formulation must agree bit-for-bit — q24_lang_sketch's oracle recomputes
@@ -13,7 +13,6 @@ class MinHashAggSpec extends SparkSpec {
   import MinHashFamily.{A, B, K, P}
 
   private lazy val hashed = {
-    MinHashSketch.register(spark)
     // 3 groups, ragged sizes, duplicate values across groups
     Seq(
       ("g1", 17L), ("g1", 423L), ("g1", 999999999L), ("g1", 423L),

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.prop.TableDrivenPropertyChecks
-import graft.functions.GraftFunctions
 
 /** The codegen'd minhash12 Expression must be bit-identical to the SQL
   * reference formulation (12 × array_min(transform(...))) — the band keys,
@@ -14,7 +13,6 @@ class MinHashSigSpec extends SparkSpec {
   private val ref = graft.queries.Similarity.sigSpark
 
   test("minhash12 equals the 12-array_min reference formulation (incl. codegen)") {
-    GraftFunctions.register(spark)
     // ragged arrays incl. single-element, duplicates, values near p
     val rows = Seq(
       Seq(17L), Seq(0L, 999999999L, 1000000006L), Seq(423L, 423L, 423L),
@@ -35,7 +33,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("empty input yields the identity signature; null propagates") {
-    GraftFunctions.register(spark)
     val m = Seq(Seq.empty[Long]).toDF("hs")
       .select(expr("minhash12(hs)")).as[Seq[Long]].head()
     assert(m === Seq.fill(12)(Long.MaxValue))
@@ -45,7 +42,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("null elements are skipped — array_min's null semantics") {
-    GraftFunctions.register(spark)
     val (withNull, without) =
       Seq((Seq[java.lang.Long](5L, null), Seq[java.lang.Long](5L)))
         .toDF("a", "b").repartition(1)
@@ -55,7 +51,6 @@ class MinHashSigSpec extends SparkSpec {
   }
 
   test("minhash12 rejects non-long arrays") {
-    GraftFunctions.register(spark)
     val e = intercept[Exception] {
       Seq(Seq("x")).toDF("hs").select(expr("minhash12(hs)")).collect()
     }

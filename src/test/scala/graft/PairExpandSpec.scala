@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** pair_expand must generate exactly the pairs of the SQL
   * flatten/transform/filter/slice nest it replaced — same prune
@@ -20,7 +19,6 @@ class PairExpandSpec extends SparkSpec {
       |      x.n + y.n AS n_sum))))""".stripMargin
 
   test("pair_expand equals the SQL expansion on ragged random posting lists") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(7)
     // lists of 0..12 postings; sizes spread so the prune fires both ways;
     // unsorted ids so canonicalization is exercised
@@ -37,7 +35,6 @@ class PairExpandSpec extends SparkSpec {
   }
 
   test("threshold 0 keeps every pair; threshold 1 keeps only equal sizes") {
-    GraftFunctions.register(spark)
     val df = Seq(Seq((1L, 10), (2L, 5), (3L, 10))).toDF("raw")
       .withColumn("ds", expr("transform(raw, r -> struct(r._1 AS doc_id, r._2 AS n))"))
     val all = df.select(expr("pair_expand(ds, 0.0D)").as("p"))
@@ -64,7 +61,6 @@ class PairExpandSpec extends SparkSpec {
       |    CAST(bit_count(x.simhash ^ y.simhash) AS INT) AS hamming))))""".stripMargin
 
   test("pair_expand_ids (id-only) equals the SQL expansion on ragged lists") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(11)
     val rows = (0 until 30).map { _ =>
       val k = rng.nextInt(13)
@@ -79,7 +75,6 @@ class PairExpandSpec extends SparkSpec {
   }
 
   test("pair_expand_ids (simhash payload) equals the SQL hamming expansion") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(13)
     val rows = (0 until 30).map { _ =>
       val k = rng.nextInt(13)
@@ -94,7 +89,6 @@ class PairExpandSpec extends SparkSpec {
   }
 
   test("bloom_agg / bloom_contains reject wrong arity with a clear error") {
-    GraftFunctions.register(spark)
     val e1 = intercept[Exception] {
       spark.sql("SELECT bloom_agg()").collect()
     }

@@ -25,7 +25,6 @@ class PqAdcSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   test("ADC distance equals the reconstructed-vector distance exactly") {
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.core.Tables.embeddings(spark, dir)
     val db = e.filter(col("vec_id") >= 8)
     val books = Similarity.pqCodebooks(db)
@@ -57,7 +56,6 @@ class PqAdcSpec extends SparkSpec {
   }
 
   test("encoding is invariant to input partitioning given a fixed codebook") {
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.core.Tables.embeddings(spark, dir)
     val db = e.filter(col("vec_id") >= 8)
     val books = Similarity.pqCodebooks(db)

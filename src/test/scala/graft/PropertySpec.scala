@@ -30,7 +30,6 @@ class PropertySpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val sigRef = graft.queries.Similarity.sigSpark
     check(Prop.forAll(Gen.nonEmptyListOf(Gen.choose(0L, graft.functions.MinHashFamily.P - 1))) {
       (hs: List[Long]) =>
@@ -54,7 +53,6 @@ class PropertySpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     // strings biased toward spaces (runs of separators are the edge case)
     val genText = Gen.listOf(Gen.frequency(
       3 -> Gen.const(' '), 5 -> Gen.alphaNumChar, 1 -> Gen.const('π')))
@@ -73,7 +71,6 @@ class PropertySpec extends AnyFunSuite {
     val spark = SparkSpec.session
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     check(Prop.forAll(Gen.asciiPrintableStr) { (s: String) =>
       val n = Seq(s).toDF("t").repartition(1)
         .select(expr("deflate_len(t)")).as[Int].head()

@@ -7,7 +7,8 @@ import graft.core.SkewJoin
 import graft.ingest.Ingest
 
 /** Specs for the scale utilities: salted skew join, streaming ingest,
-  * extensions-based function injection. */
+  * extensions-based function injection (the only way graft's functions
+  * reach a session: every session must carry GraftExtensions). */
 class ScaleToolsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,26 +54,44 @@ class ScaleToolsSpec extends SparkSpec {
     assert(rows.select($"hour").as[Int].collect().sorted.toSeq === Seq(1, 2, 3))
   }
 
-  test("GraftExtensions injects dotf into a fresh session (spark.sql path)") {
-    // getOrCreate returns any existing session and ignores withExtensions —
-    // clear the active/default refs so a NEW SparkSession (reusing the
-    // SparkContext) is built with the extensions, then restore.
+  /** Run `body` on a NEW SparkSession (reusing the SparkContext) built by
+    * `configure`, then restore the shared one. getOrCreate returns any
+    * existing session and ignores withExtensions, so the active/default
+    * refs are cleared first. */
+  private def withFreshSession[A](configure: SparkSession.Builder => SparkSession.Builder)
+                                 (body: SparkSession => A): A = {
     val prev = spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.functions.GraftExtensions)
-        .getOrCreate()
-      // register via extensions only — no GraftFunctions.register call
+    try body(configure(SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false")).getOrCreate())
+    finally {
+      SparkSession.setActiveSession(prev)
+      SparkSession.setDefaultSession(prev)
+    }
+  }
+
+  test("GraftExtensions injects dotf into a fresh session (spark.sql path)") {
+    withFreshSession(_.withExtensions(new graft.functions.GraftExtensions)) { s2 =>
+      // GraftExtensions is the only registration path: every entry of the
+      // function table resolves, to the expression class it declares
+      graft.functions.GraftFunctions.all.foreach { case (name, cls, _) =>
+        val info = s2.sessionState.functionRegistry.lookupFunction(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+        assert(info.map(_.getClassName) === Some(cls.getName), name)
+      }
       val v = s2.sql("SELECT dotf(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
         .collect()(0).getDouble(0)
       assert(v === 11.0)
-    } finally {
-      SparkSession.setActiveSession(prev)
-      SparkSession.setDefaultSession(prev)
+    }
+  }
+
+  test("openSql on a session without GraftExtensions fails naming the fix") {
+    withFreshSession(identity) { plain =>
+      val e = intercept[IllegalArgumentException](GraftSession.openSql(plain, sf001))
+      assert(e.getMessage.contains(
+        "--conf spark.sql.extensions=graft.functions.GraftExtensions"))
+      assert(e.getMessage.contains("withExtensions"))
     }
   }
 }

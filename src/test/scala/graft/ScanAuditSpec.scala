@@ -35,7 +35,6 @@ class ScanAuditSpec extends SparkSpec {
   )
 
   test("no lane outside the adjudicated allowlist scans one table >= 3 times") {
-    graft.functions.GraftFunctions.register(spark)
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
     val findings = graft.tools.ScanAudit.audit(spark, sf001, threshold = 3,
       onError = (lane, e) => errors += s"$lane: ${e.getMessage}")

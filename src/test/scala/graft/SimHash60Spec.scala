@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** The codegen'd simhash60 Expression must be bit-identical to the
   * 60-sum-column aggregation formulation it replaced — four lanes
@@ -13,7 +12,6 @@ class SimHash60Spec extends SparkSpec {
   test("simhash60 equals the aggregation formulation on the sf0.001 corpus") {
     val agg = graft.queries.Similarity.simhashesAgg(spark, sf001)
       .as[(Long, Long)].collect().toMap
-    GraftFunctions.register(spark)
     // the parquet scan is a real executor stage, so this exercises the
     // doGenCode path (unlike a LocalRelation, which constant-folds);
     // TextOps.h60 is the ONE hash definition — no inline copy
@@ -27,7 +25,6 @@ class SimHash60Spec extends SparkSpec {
   }
 
   test("interpreted path agrees with codegen; empty array -> 0; null propagates") {
-    GraftFunctions.register(spark)
     val rows = Seq(Seq(1L, 2L, 3L), Seq((1L << 59) | 1L), Seq.empty[Long])
     def run(): Seq[Long] =
       // repartition: force an executor stage (see MinHashSigSpec note)
@@ -44,7 +41,6 @@ class SimHash60Spec extends SparkSpec {
   }
 
   test("null elements are skipped, not voted as zero") {
-    GraftFunctions.register(spark)
     val withNull = Seq((Seq[java.lang.Long](5L, null), Seq[java.lang.Long](5L)))
       .toDF("a", "b").repartition(1)
       .select(expr("simhash60(a)").as("x"), expr("simhash60(b)").as("y"))

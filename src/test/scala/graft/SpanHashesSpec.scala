@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 import graft.queries.TextOps.h60
 
 /** span_hashes must equal the naive per-window double-Horner formulation
@@ -22,7 +21,6 @@ class SpanHashesSpec extends SparkSpec {
        |         0L, (a, h) -> (a * $B2 + h) % $P2)), array())""".stripMargin
 
   test("rolling hashes equal the naive window folds on ragged random docs") {
-    GraftFunctions.register(spark)
     val rng = new scala.util.Random(17)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "x", "longertokenvalue", "7", "")
     val rows = (0 until 40).map { _ =>
@@ -41,7 +39,6 @@ class SpanHashesSpec extends SparkSpec {
   }
 
   test("k = 1 degenerates to the per-token combined hash; k > n is empty") {
-    GraftFunctions.register(spark)
     val df = Seq(Seq("a", "b", "a")).toDF("toks")
     val one = df.select(expr("span_hashes(toks, 1)").as("h")).as[Seq[Long]].head()
     assert(one.length === 3)
@@ -51,7 +48,6 @@ class SpanHashesSpec extends SparkSpec {
   }
 
   test("identical windows at different positions collide; shifted windows do not") {
-    GraftFunctions.register(spark)
     val df = Seq(Seq("p", "q", "r", "p", "q", "r")).toDF("toks")
     val hs = df.select(expr("span_hashes(toks, 3)").as("h")).as[Seq[Long]].head()
     assert(hs.length === 4)

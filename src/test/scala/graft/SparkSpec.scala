@@ -37,10 +37,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  // withExtensions mirrors GraftSession (production parity): the injected
-  // functions coexist with the specs' imperative GraftFunctions.register
-  // calls, and the one injected optimizer rule (ApproxDistinctRule) is
-  // conf-gated default-OFF, so the default test path is unchanged.
+  // withExtensions mirrors GraftSession (production parity): it is the only
+  // way graft's custom functions reach a session, so no spec registers
+  // them itself. The injected ApproxDistinctRule is conf-gated default-OFF,
+  // so the default test path is unchanged.
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Laws of the `tokenize_pos` Generator (`functions.TokenizePos`):
   * reconstruction (collecting toks = split(text, ' ')), the substr law
@@ -12,7 +11,6 @@ class TokenizePosSpec extends SparkSpec {
   import spark.implicits._
 
   test("substr law and reconstruction hold on the real corpus") {
-    GraftFunctions.register(spark)
     val docs = graft.core.Tables.documents(spark, sf001)
     val toks = docs
       .select($"doc_id", $"text", expr("tokenize_pos(text)").as(Seq("pos", "start_char", "tok")))
@@ -29,7 +27,6 @@ class TokenizePosSpec extends SparkSpec {
   }
 
   test("edge cases follow the split(text, ' ') convention") {
-    GraftFunctions.register(spark)
     def rows(s: String) =
       Seq(Tuple1(s)).toDF("text").repartition(2)
         .select(expr("tokenize_pos(text)").as(Seq("pos", "start_char", "tok")))
