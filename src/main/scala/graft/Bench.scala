@@ -1,13 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.Try
+import scala.util.control.NonFatal
 
-/** Per-round benchmark main: times every SparkEntry query warm (one JVM
-  * warmup pass first — BASELINE.md excludes first-query codegen/JIT cost)
-  * plus the Q30 ingest slice (read → normalize → hour-partitioned write),
-  * and prints ONE JSON line for the driver.
+/** Per-round benchmark main, and the one definition of how a lane is timed
+  * ([[Bench.noopPass]]). Times every SparkEntry lane twice through the
+  * noop sink — cold, then warm; the warm pass is the gated `queries` dict
+  * and `value` (BASELINE.md excludes first-invocation codegen/JIT cost) —
+  * plus the Q30 ingest, Q27 stream and R10 push slices, and prints a full
+  * and a compact JSON line for the driver.
   */
 object Bench {
+
+  /** One timed lane pass: build the lane and write every column to the
+    * `noop` sink. Timing `count()` instead lets Catalyst prune the columns
+    * the count does not need, which benches a hollowed plan (measured round
+    * 9: q52 0.53 s counted vs ~20 s materialized). Returns the elapsed
+    * seconds, or the lane's non-fatal failure; fatal errors and interrupts
+    * propagate. Outside the timed region, every cached block is released
+    * ([[GraftSession.releaseCaches]]) and a GC is requested, so the next
+    * pass starts against an empty block store and never reads this pass's
+    * cache — across 100+ lanes that debris inflated later lanes ~2×
+    * (rounds 3 and 4). A failed release fails the pass. */
+  def noopPass(spark: SparkSession, lane: (SparkSession, String) => DataFrame,
+      sfDir: String): Try[Double] = {
+    val t0 = System.nanoTime()
+    val pass = Try {
+      lane(spark, sfDir).write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
+    }
+    val released = Try { GraftSession.releaseCaches(spark); System.gc() }
+    pass.flatMap(dt => released.map(_ => dt))
+  }
+
   def main(args: Array[String]): Unit = {
     // r13 VERDICT task 7: the barrier A/B override must never shape a
     // production artifact — fail loudly, don't silently bench a mutant.
@@ -47,7 +73,7 @@ object Bench {
       graft.core.Tables.lineitem(spark, sfDir)
         .groupBy(col("l_returnflag")).count().count()
       graft.queries.Relational.q11(spark, sfDir).count()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
 
@@ -62,7 +88,7 @@ object Bench {
     // renames, GC debt across reps, scheduler noise) read as monotone
     // throughput decay — the official r9 median was really "rep 3 of a
     // decaying series" (97k→17.7k under contention). Measured fix
-    // (IngestTime, 7 reps): GC barrier before each rep + 3 consecutive
+    // (7 reps): GC barrier before each rep + 3 consecutive
     // writes per timed region + FULL-size warmup ×2 converges reps to
     // 188–216 k rows/s with max/min 1.14. /tmp here is real disk (vda),
     // not tmpfs, and the per-rep deletes were already in place — the decay
@@ -75,7 +101,7 @@ object Bench {
         try walk.sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(java.nio.file.Files.delete)
         finally walk.close() // walk holds directory handles until closed
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     val ingestWrites = 3 // consecutive writes per timed rep (amortizes fixed cost)
     val (nRows, ingestRps, ingestRepsRps) = try {
       val ev = graft.core.Tables.events(spark, sfDir)
@@ -113,7 +139,7 @@ object Bench {
       // round-9 review read as systematic per-rep decay. It was the sort.
       val rowsPerRep = n.toDouble * ingestWrites
       (n, rowsPerRep / repTimes.sorted.apply(3), repTimes.map(rowsPerRep / _))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] ingest slice failed: ${e.getMessage}")
       (0L, -1.0, Seq.empty[Double])
     }
@@ -175,7 +201,7 @@ object Bench {
       // kept TEMPORAL for the report; only a sorted COPY picks the median.
       val reps = (0 until 5).map(_ => streamPass())
       (cold, reps.sorted.apply(2), reps)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] stream slice failed: ${e.getMessage}")
       (-1.0, -1.0, Seq.empty[Double])
     } finally spark.conf.set("spark.sql.shuffle.partitions", cpus) // restore the session width, not a hardcoded 32
@@ -223,37 +249,11 @@ object Bench {
         docs.unpersist(blocking = true)
         (reps.sorted.apply(1), reps)
       } finally { server.stop(0); es.shutdownNow() }
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] push slice failed: ${e.getMessage}")
       (-1.0, Seq.empty[Double])
     }
 
-    // Cold and warm failures tracked SEPARATELY (round-6 ADVICE): a query
-    // that fails only its cold pass but succeeds warm still has a valid warm
-    // (reported) measurement, so only warm-pass failures exclude a query from
-    // the headline total and the driver-contract `failed` array. Cold-only
-    // failures ride along in `failed_cold` for transparency.
-    val failedCold = scala.collection.mutable.LinkedHashSet[String]()
-    val failedWarm = scala.collection.mutable.LinkedHashSet[String]()
-    // Inter-measurement hygiene, OUTSIDE the timed regions: lanes persist()/
-    // localCheckpoint shared frames whose release normally waits on GC + the
-    // ASYNC ContextCleaner — across 100+ queries that debris inflated later
-    // queries ~2x vs standalone warm (judge-measured in rounds 3 AND 4:
-    // clearCache+System.gc alone does NOT drain the cleaner queue). Blocking
-    // unpersist removes every cache block synchronously — getPersistentRDDs
-    // is the authoritative registry, and unpersist(blocking=true) returns
-    // only after the BlockManager dropped the blocks — so each measurement
-    // starts against an empty block store, like a standalone NoopTime rep.
-    // guarded: hygiene must never kill the loop — the report (with its
-    // per-query failures) must still be emitted on a broken session
-    def hygiene(): Unit =
-      try {
-        GraftSession.releaseCaches(spark) // the r11 first-class API; see its scaladoc
-        System.gc()
-      } catch { case _: Throwable => () }
-    val coldTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val noopTimes = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val failedNoop = scala.collection.mutable.LinkedHashSet[String]()
     // Scaling-probe legibility (r15 VERDICT task 2): at bench SFs most
     // lanes are floor-bound (fixed per-lane scheduling/AQE cost), so a
     // c8-vs-c32 wall-clock ratio near 1 cannot distinguish "serial lane"
@@ -261,10 +261,10 @@ object Bench {
     // suspect_cpus_ignored heuristic on an honest harness. The artifact now
     // carries the evidence to tell them apart: the session's cpu/
     // parallelism echo plus, per lane, Σ task-time / noop-wall (a lane
-    // using one core reads ~1; a 32-wide CPU-bound lane reads ≫ 1). The
-    // listener only ACCUMULATES during the gated noop pass; events are
-    // drained (GraftSession.drainListenerBus) before each snapshot so a
-    // pass cannot bleed into the next.
+    // using one core reads ~1; a 32-wide CPU-bound lane reads ≫ 1). Two
+    // snapshots bracket each gated warm pass; events are drained
+    // (GraftSession.drainListenerBus) before each snapshot so a pass cannot
+    // bleed into the next.
     val taskTimeMs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -273,148 +273,75 @@ object Bench {
           if (t.taskMetrics != null)
             taskTimeMs.addAndGet(t.taskMetrics.executorRunTime)
       })
-    val noopTaskSec = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // Local-iteration knob only (driver never sets it): comma-separated
-    // lane-name prefixes restrict the run, e.g. SPARK_GRAFT_ONLY=q20,q24
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .map { case (name, fn) =>
-      // TWO passes per query, report the second: pass 1 pays the query's
-      // OWN codegen + plan compilation (the generic warmup above cannot
-      // pre-compile 100+ distinct plans), which is one-time cost a
-      // long-lived deployment never re-pays — BASELINE.md targets are
-      // steady-state. Round-5 measurement: one-shot in-loop numbers ran
-      // 1.4-2x a standalone warm NoopTime rep purely from in-region
-      // compilation; the block-debris fix alone did not close that. The
-      // cold pass rides along in queries_cold for transparency.
-      def once(into: scala.collection.mutable.LinkedHashSet[String]): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case e: Throwable =>
-          into += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        hygiene()
-        dt
+    // TWO noop passes per lane, the second gated: the cold pass pays the
+    // lane's OWN codegen + plan compilation (the generic warmup above
+    // cannot pre-compile 190+ distinct plans), one-time cost a long-lived
+    // deployment never re-pays — BASELINE.md targets are steady-state. The
+    // cold pass rides along in queries_cold. A lane with either pass failed
+    // has no valid steady-state measurement: it is reported in `failed` and
+    // left out of every per-lane dict, `value` and the bar statistics.
+    final case class LaneRun(name: String, cold: Double, warm: Double, taskSec: Double)
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    val lanes = SparkEntry.queries.toSeq.sortBy(_._1)
+    val ok = lanes.flatMap { case (name, fn) =>
+      def logFailure(pass: String)(e: Throwable): Unit = {
+        failed += name
+        System.err.println(s"[bench] $name $pass FAILED: ${e.getMessage}")
       }
-      coldTimes(name) = once(failedCold)
-      val warm0 = once(failedWarm)
-      // If the cold pass failed (possibly before compiling the plan), the
-      // first successful pass above still paid codegen — one more pass makes
-      // the reported number genuinely warm (r7 ADVICE). The retry runs into
-      // a scratch set: if it flakes, keep warm0 (a valid measurement) rather
-      // than adopting the failed pass's duration (r8 ADVICE).
-      val warm =
-        if (failedCold(name) && !failedWarm(name)) {
-          val scratch = scala.collection.mutable.LinkedHashSet[String]()
-          val retry = once(scratch)
-          if (scratch.isEmpty) retry else warm0
-        } else warm0
-      // THIRD pass, full materialization (noop sink): count()-based timing
-      // lets Catalyst PRUNE columns the count does not need — for most
-      // lanes the heavy work decides cardinality and survives, but a lane
-      // whose cost lives in non-cardinality columns (q52's flag pipeline,
-      // pure-projection lanes like q23_fingerprint) benches a hollowed
-      // plan. Measured round-9: q52_curate_e2e 0.53 s counted vs ~20 s
-      // fully materialized (pre-barrier). `queries` stays the historical
-      // count-based contract (round-over-round comparability);
-      // `queries_noop` is the every-column truth the Verify gate pays.
+      val cold = noopPass(spark, fn, sfDir)
+      cold.failed.foreach(logFailure("cold"))
       GraftSession.drainListenerBus(spark)
       val taskMs0 = taskTimeMs.get()
-      val tN = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        failedNoop += name
-        System.err.println(s"[bench] $name noop FAILED: ${e.getMessage}")
-      }
-      noopTimes(name) = (System.nanoTime() - tN) / 1e9
+      val warm = noopPass(spark, fn, sfDir)
+      warm.failed.foreach(logFailure("warm"))
       GraftSession.drainListenerBus(spark)
-      noopTaskSec(name) = (taskTimeMs.get() - taskMs0) / 1e3
-      hygiene()
-      name -> warm
+      val taskSec = (taskTimeMs.get() - taskMs0) / 1e3
+      for (c <- cold.toOption; w <- warm.toOption) yield LaneRun(name, c, w, taskSec)
     }
-
-    // r10 (VERDICT r9 item 2): the GATED headline is now the FULL-
-    // MATERIALIZATION (noop-sink) metric. count()-based timing lets
-    // Catalyst prune columns the count does not need, so a lane whose cost
-    // lives in non-cardinality columns benches a hollowed plan (measured:
-    // q52 0.53 s counted vs ~20 s materialized pre-fix). `queries` — the
-    // driver-contract dict BASELINE.md bars compare against — therefore
-    // carries the NOOP times; the historical count-based warm times ride
-    // along as `queries_counted_warm` for round-over-round comparability
-    // with BENCH_r1–r9.
-    val qsCounted = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qsCold = coldTimes.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qsNoop = noopTimes.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val noopTotal = noopTimes.collect { case (k, v) if !failedNoop(k) => v }.sum
-    val failedNoopJson = failedNoop.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // counted warm total = WARM passes of queries whose WARM pass succeeded;
-    // a failed query's near-zero dt would silently understate the total (r5
-    // ADVICE), but a cold-only failure leaves the warm number valid (r6)
-    val countedTotal = results.collect { case (k, v) if !failedWarm(k) => v }.sum
-    // `failed` (driver contract) = lanes with no valid GATED measurement,
-    // i.e. noop-pass failures. The warm/cold count-pass ride-along lists
-    // hold ONLY lanes not already in the gated list (r10 ADVICE: the old
-    // failed_cold filtered against failedWarm while the gate had moved to
-    // noop, classifying a cold+noop-fail/warm-pass lane inconsistently) —
-    // each lane appears in exactly one of the three failure lists.
+    def dict(v: LaneRun => Double): String =
+      ok.map(r => "\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
+    val noopTotal = ok.map(_.warm).sum
     // Anchor-normalized round-over-round deltas (r12 VERDICT task 4): the
     // previous round's BENCH artifact + the anchors make "faster or just a
     // faster box?" mechanical — see core/PrevBench.scala for conventions.
     // The prev artifact is loaded ONCE and shared with the per-bar verdicts.
     val prevBench = try graft.core.PrevBench.load()
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] prev load failed: ${e.getMessage}"); None
     }
-    val vsPrev = try {
-      val okNoop = noopTimes.filterNot { case (k, _) => failedNoop(k) }
-      graft.core.PrevBench.report(anchorS, anchorIo, noopTotal,
-        ingestRps, streamWarmRps, pushRps, okNoop, prevBench, anchorMt)
-    } catch { case e: Throwable =>
+    val vsPrev = try graft.core.PrevBench.report(anchorS, anchorIo, noopTotal,
+      ingestRps, streamWarmRps, pushRps, ok.map(r => r.name -> r.warm).toMap,
+      prevBench, anchorMt)
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] vs_prev failed: ${e.getMessage}"); "null"
     }
-    val failedJson = failedNoop.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedWarmJson =
-      failedWarm.filterNot(failedNoop).map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedColdJson = failedCold
-      .filterNot(n => failedWarm(n) || failedNoop(n))
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Per-bar verdicts with normalized twins (r13 VERDICT task 5): raw
     // pass/fail against the BASELINE.md bars plus the anchor-normalized
     // vs-prev ratio and a divergence flag — a bar passed on disk weather
     // (or failed on it) is readable from the artifact alone.
-    def statsOf(vals: Seq[Double]): (Double, Double, Double, Double) = {
-      val s = vals.sorted
+    val (noopMean, noopP50, noopP95, noopMax) = {
+      val s = ok.map(_.warm).sorted
       def pctl(p: Double): Double =
         if (s.isEmpty) -1.0 else s(math.min(s.size - 1, (p * s.size).toInt))
       (if (s.isEmpty) -1.0 else s.sum / s.size, pctl(0.5), pctl(0.95), pctl(1.0))
     }
-    val noopOkPairs = noopTimes.toSeq.filterNot { case (k, _) => failedNoop(k) }
-    val (noopMeanV, noopP50V, noopP95V, noopMaxV) = statsOf(noopOkPairs.map(_._2))
     val barsJson = try graft.core.PrevBench.barsReport(anchorS, anchorIo,
-      noopMeanV, noopP95V, ingestRps, streamWarmRps, pushRps, prevBench)
-    catch { case e: Throwable =>
+      noopMean, noopP95, ingestRps, streamWarmRps, pushRps, prevBench)
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] bars failed: ${e.getMessage}"); "null"
     }
-    // Key order is deliberate: cold/counted dicts FIRST, the gated dict
+    // Key order is deliberate: the cold dict FIRST, the gated dict
     // (`queries`, what BASELINE.md targets compare against) LAST among the
     // dicts — a tail window of this (long) line, which is what a
     // BENCH_r*.json reader usually sees, then shows the gated numbers.
-    // Σ task-time per lane during the gated noop pass (r15 VERDICT task 2:
+    // Σ task-time per lane during the gated warm pass (r15 VERDICT task 2:
     // the scaling probe's per-lane parallelism evidence). Ratio to the wall
     // is computed reader-side; raw seconds keep the artifact unit-honest.
-    val qsTask = noopTaskSec
-      .map { case (k, v) => "\"" + k + "\":" + math.rint(v * 100) / 100 }
-      .mkString("{", ",", "}")
     val json = s"""{"metric":"total_noop","value":$noopTotal,"unit":"sec","gated_dict":"queries(noop)",""" +
       s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
-      s""""queries_task_sec":$qsTask,""" +
-      s""""queries_cold":$qsCold,""" +
-      s""""queries_counted_warm":$qsCounted,"counted_total":$countedTotal,""" +
-      s""""failed_noop":$failedNoopJson,""" +
+      s""""queries_task_sec":${dict(r => math.rint(r.taskSec * 100) / 100)},""" +
+      s""""queries_cold":${dict(_.cold)},""" +
       s""""ingest_rows_per_sec":$ingestRps,"ingest_rows":$nRows,""" +
       s""""ingest_reps_rows_per_sec":${ingestRepsRps.mkString("[", ",", "]")},""" +
       s""""stream_rows_per_sec":$streamRps,"stream_warm_rows_per_sec":$streamWarmRps,""" +
@@ -425,13 +352,13 @@ object Bench {
       s""""anchor_mt_threads":${graft.core.Calibration.mtThreads},""" +
       s""""anchor_io_mbps":$anchorIo,""" +
       s""""vs_prev_normalized":$vsPrev,"bars":$barsJson,""" +
-      s""""failed":$failedJson,"failed_warm":$failedWarmJson,"failed_cold":$failedColdJson,""" +
-      s""""queries":$qsNoop,"sf":"$sfDir"}"""
+      s""""failed":$failedJson,""" +
+      s""""queries":${dict(_.warm)},"sf":"$sfDir"}"""
     // Durable copy: the driver's stdout scrape lost the line start in round 1
     // ("parsed": null) — a file survives any log truncation.
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_result.json"),
       (json + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     println(json)
     Console.out.flush()
     // Compact summary line: the driver keeps only the LAST ~2 KB of stdout,
@@ -442,12 +369,9 @@ object Bench {
     // failures, and the slowest lanes; the complete per-lane dicts live in
     // the full line above and in bench_result.json.
     def r3(v: Double) = math.rint(v * 1000) / 1000
-    val noopOk = noopOkPairs
-    val warmOk = results.filterNot { case (k, _) => failedWarm(k) }
-    val (noopMean, noopP50, noopP95, noopMax) = (noopMeanV, noopP50V, noopP95V, noopMaxV)
-    val (warmMean, warmP50, warmP95, warmMax) = statsOf(warmOk.map(_._2))
-    val slowest = noopOk.sortBy(-_._2).take(15)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
+    val slowest = ok.sortBy(-_.warm)
+    val top15 = slowest.take(15)
+      .map(r => "\"" + r.name + "\":" + r3(r.warm)).mkString("{", ",", "}")
     val ingestSpread =
       if (ingestRepsRps.isEmpty || ingestRepsRps.min <= 0) -1.0
       else r3(ingestRepsRps.max / ingestRepsRps.min)
@@ -459,17 +383,15 @@ object Bench {
     // compact line alone (~1 ⇒ floor-bound or serial; ≫ 1 ⇒ the cores were
     // used; compare against the run's own `cpus` echo). One decimal keeps
     // the line inside the driver's stdout tail window.
-    val parTop = noopOk.sortBy(-_._2).take(10).map { case (k, w) =>
-      val r = if (w > 0) noopTaskSec.getOrElse(k, 0.0) / w else 0.0
-      "\"" + k + "\":" + math.rint(r * 10) / 10
+    val parTop = slowest.take(10).map { r =>
+      val par = if (r.warm > 0) r.taskSec / r.warm else 0.0
+      "\"" + r.name + "\":" + math.rint(par * 10) / 10
     }.mkString("{", ",", "}")
     val compact = s"""{"metric":"total_noop","value":${r3(noopTotal)},"unit":"sec",""" +
       s""""cpus":$cpus,"default_parallelism":${spark.sparkContext.defaultParallelism},""" +
       s""""par":$parTop,""" +
-      s""""n_queries":${results.size},"noop_mean":${r3(noopMean)},""" +
+      s""""n_queries":${lanes.size},"noop_mean":${r3(noopMean)},""" +
       s""""noop_p50":${r3(noopP50)},"noop_p95":${r3(noopP95)},"noop_max":${r3(noopMax)},""" +
-      s""""counted_total":${r3(countedTotal)},"counted_warm_mean":${r3(warmMean)},""" +
-      s""""counted_warm_p50":${r3(warmP50)},"counted_warm_p95":${r3(warmP95)},"counted_warm_max":${r3(warmMax)},""" +
       s""""ingest_rows_per_sec":${math.rint(ingestRps)},"ingest_rep_spread":$ingestSpread,""" +
       s""""stream_rows_per_sec":${math.rint(streamRps)},""" +
       s""""stream_warm_rows_per_sec":${math.rint(streamWarmRps)},""" +
@@ -478,8 +400,8 @@ object Bench {
       s""""anchor_s":${r3(anchorS)},"anchor_mt_s":${r3(anchorMt)},""" +
       s""""anchor_io_mbps":${r3(anchorIo)},""" +
       s""""vs_prev_normalized":$vsPrev,"bars":$barsJson,""" +
-      s""""failed":$failedJson,"failed_warm":$failedWarmJson,"failed_cold":$failedColdJson,""" +
-      s""""queries":$slowest,""" +
+      s""""failed":$failedJson,""" +
+      s""""queries":$top15,""" +
       s""""queries_note":"15 slowest noop lanes; full dicts in bench_result.json","sf":"$sfDir"}"""
     spark.stop()
     // Print again AFTER spark.stop so the bare JSON lines are the process's

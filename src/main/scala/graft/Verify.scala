@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -48,16 +49,14 @@ object Verify {
           else d
         }
         ntz.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // Lanes persist() shared frames for intra-query reuse; drop them per
       // query so 100+ cached frames don't pile up over the run (and no
       // query reads a predecessor's cache via canonical-plan matching).
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      } catch { case _: Throwable => () }
+      try GraftSession.releaseCaches(spark)
+      catch { case NonFatal(_) => () }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.util.control.NonFatal
+
 /** Anchor-normalized round-over-round bench deltas (r12 VERDICT task 4).
   *
   * Rounds land on differently-clocked containers; r11→r12's "~2.5× slower
@@ -120,7 +122,7 @@ object PrevBench {
   def load(f: java.io.File): Option[Prev] = {
     val text = try new String(
       java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-    catch { case _: Throwable => "" }
+    catch { case NonFatal(_) => "" }
     for {
       a <- num(text, "anchor_s")
       io <- num(text, "anchor_io_mbps")

@@ -80,8 +80,7 @@ object ApiLimitCalculator {
     * width. 32 stores for 39 k window rows spent more in per-store
     * load/snapshot/commit file I/O than in aggregation (PLANS.md §Round-4
     * phase table: Σ commitTimeMs drops ~40× at width 4). ONE definition —
-    * Bench sizes its stream slice with it and StreamTime must reproduce
-    * exactly that configuration to attribute it. */
+    * Bench sizes its stream slice with it. */
   def streamStateWidth(rows: Long, maxWidth: Long): Long =
     math.max(4L, math.min(maxWidth, rows / 25_000L))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import scala.util.control.NonFatal
 
 /** Shared commit machinery for the `v=<batchId>` immutable-version scheme
   * used by [[StreamingJobs.applyCdcBatch]] / `applyFingerprintBatch` /
@@ -163,7 +164,7 @@ object VersionStore {
         }
       }
     } catch { case t: Throwable =>
-      try deleteRecursively(staging) catch { case _: Throwable => () }
+      try deleteRecursively(staging) catch { case NonFatal(_) => () }
       throw t
     }
   }

@@ -1,8 +1,9 @@
 package graft.tools
 
 /** Barrier-tax A/B (r12 VERDICT task 3): for each named lane, time the
-  * full lane (construction + count) under each barrier
-  * mechanism — localCheckpoint(true) vs persist() vs none — by flipping
+  * full lane pass ([[graft.Bench.noopPass]]: construction + noop-sink
+  * materialization) under each barrier mechanism —
+  * localCheckpoint(true) vs persist() vs none — by flipping
   * the `graft.barrier.mode` override that every `Barrier.bounded` call
   * site honors. 4 reps per (lane, mode); rep0 discarded (codegen), median
   * of the rest reported. Lanes that never call Barrier.bounded time the
@@ -25,16 +26,8 @@ object BarrierAB {
       args.foreach { lane =>
         val row = modes.map { mode =>
           sys.props("graft.barrier.mode") = mode
-          val times = (0 until 4).map { _ =>
-            val t0 = System.nanoTime()
-            graft.SparkEntry.queries(lane)(spark, sfDir).count()
-            val dt = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = true))
-            System.gc()
-            dt
-          }
+          val times = (0 until 4).map(_ =>
+            graft.Bench.noopPass(spark, graft.SparkEntry.queries(lane), sfDir).get)
           // median of the 3 warm reps
           val warm = times.drop(1).sorted.apply(1)
           f"$mode=$warm%.3f"

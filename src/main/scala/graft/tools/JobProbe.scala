@@ -3,10 +3,11 @@ package graft.tools
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
-/** Dev-only: run one lane N passes with a listener that prints every job's
-  * wall time and its stages' task-time/shuffle totals — for finding WHERE a
-  * lane's wall clock goes when stage-cut probes disagree with end-to-end
-  * timing. Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.JobProbe <lane> [passes]
+/** Dev-only: run one lane N passes ([[graft.Bench.noopPass]]) with a
+  * listener that prints every job's wall time and its stages' task-time/
+  * shuffle totals — for finding WHERE a lane's wall clock goes when
+  * stage-cut probes disagree with end-to-end timing.
+  * Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.JobProbe <lane> [passes]
   */
 object JobProbe {
   def main(args: Array[String]): Unit = {
@@ -60,9 +61,7 @@ object JobProbe {
     val fn = graft.SparkEntry.queries(lane)
     for (p <- 0 until passes) {
       jobs.clear(); jobEnd.clear(); stages.clear()
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = graft.Bench.noopPass(spark, fn, sfDir).get
       // drain the async listener bus so straggler events cannot bleed
       // into the next pass's stats
       graft.GraftSession.drainListenerBus(spark)
@@ -82,9 +81,6 @@ object JobProbe {
           }
         }
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      System.gc()
     }
     spark.stop()
   }

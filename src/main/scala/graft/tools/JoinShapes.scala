@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 /** No-broadcast join-shape audit (round-9): executes EVERY SparkEntry lane
   * and classifies the join operators in its FINAL adaptive plan — run once
   * normally and once with SPARK_GRAFT_NO_BROADCAST=1 (auto-broadcast
@@ -36,13 +38,11 @@ object JoinShapes {
               s"SHJ=${n("ShuffledHashJoin")} BNLJ=${n("BroadcastNestedLoopJoin")} " +
               s"CART=${n("CartesianProduct")} ok=true"
           } catch {
-            case e: Throwable => s"$name FAILED: ${e.getMessage.take(120)} ok=false"
+            case NonFatal(e) => s"$name FAILED: ${e.getMessage.take(120)} ok=false"
           }
         println(s"[joinshapes] $line")
-        try {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        } catch { case _: Throwable => () }
+        try graft.GraftSession.releaseCaches(spark)
+        catch { case NonFatal(_) => () }
       }
     }
     spark.stop()

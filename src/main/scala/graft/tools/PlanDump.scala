@@ -25,8 +25,7 @@ object PlanDump {
         l.contains("Join") || l.contains("Exchange") || l.contains("Scan") ||
           l.contains("Aggregate") || l.contains("Window") || l.contains("Sort") ||
           l.contains("InMemory")).foreach(println)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.GraftSession.releaseCaches(spark)
     }
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Dev-only scale smoke: self-union the sf0.1 documents/embeddings tables
   * 8× (doc_id remapped per copy — 8 identical twins per original doc, the
@@ -263,7 +264,7 @@ object ScaleSmoke {
             java.nio.file.Files.walk(java.nio.file.Paths.get(dst))
               .sorted(java.util.Comparator.reverseOrder())
               .iterator().asScala.foreach(java.nio.file.Files.delete)
-          } catch { case _: Throwable => () }
+          } catch { case NonFatal(_) => () }
           dt
         }.sorted
         println(f"[scale$copies] ingest: $n rows, median ${n / reps(1)}%.0f rows/s " +
@@ -279,8 +280,7 @@ object ScaleSmoke {
         val peak = heapPools.map(_.getPeakUsage.getUsed).sum
         println(f"[scale$copies] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.1fs rows=$n " +
           f"peak_heap=${peak / 1073741824.0}%.1fg/${xmxBytes / 1073741824.0}%.1fg")
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        graft.GraftSession.releaseCaches(spark)
         System.gc()
         // settle (the Bench r10 lesson): System.gc() QUEUES ContextCleaner
         // work (shuffle-file removal) that otherwise executes ASYNC inside

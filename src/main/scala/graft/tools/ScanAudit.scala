@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import scala.util.control.NonFatal
 
 /** Recompute-class audit (r12; gated by ScanAuditSpec since r13): the
   * q34_funnel/q80/q86 defects all had one signature — a derived frame
@@ -55,12 +56,11 @@ object ScanAudit {
             byTable.filter(_._2 >= threshold).keys.mkString(", ")))
         else None
       } catch {
-        case e: Throwable => onError(name, e); None
+        case NonFatal(e) => onError(name, e); None
       }
       // lanes persist()/checkpoint shared frames at build time — drop them
       // so one lane's cache never changes another lane's plan shape
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.GraftSession.releaseCaches(spark)
       row
     }.sortBy(-_.maxScans)
 

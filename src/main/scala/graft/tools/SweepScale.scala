@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 /** Dev-only FULL-LANE scale sweep (r9 verdict task 3): run EVERY
   * `SparkEntry.queries` lane against a `copies`×-widened corpus (the
   * ScaleSmoke self-union build, all 10 tables) and record warm
@@ -66,7 +68,9 @@ object SweepScale {
             fn(spark, out).write.format("noop").mode("overwrite").save()
             Right((System.nanoTime() - t0) / 1e9)
           } catch {
-            case e: Throwable =>
+            // the watchdog's last escalation interrupts this runner thread
+            case _: InterruptedException => Left("timeout")
+            case NonFatal(e) =>
               // Root-cause message inline (r11: q93's 128× failure printed
               // only `error:SparkException` — useless for diagnosis);
               // newlines stripped so the line stays grep-parseable.
@@ -118,13 +122,12 @@ object SweepScale {
         runner.join(30000L)
       }
       done.set(true)
-      val r0 = Option(results.get(0)).getOrElse(Left("timeout"): Either[String, Double])
+      // no result without a cancel: a fatal error ended the runner thread
+      val r0 = Option(results.get(0)).getOrElse(
+        Left(if (cancelled.get()) "timeout" else "error:runner-died"): Either[String, Double])
       val r1 = Option(results.get(1)).getOrElse(r0)
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-      } catch { case _: Throwable => () }
+      try { graft.GraftSession.releaseCaches(spark); System.gc() }
+      catch { case NonFatal(_) => () }
       val (status, cold, warm) = (r0, r1) match {
         case (Right(a), Right(b)) => ("ok", f"$a%.2f", f"$b%.2f")
         case (Right(a), Left(s))  => (s, f"$a%.2f", "-1")
