@@ -305,7 +305,7 @@ object Bench {
     // previous round's BENCH artifact + the anchors make "faster or just a
     // faster box?" mechanical — see core/PrevBench.scala for conventions.
     // The prev artifact is loaded ONCE and shared with the per-bar verdicts.
-    val prevBench = try graft.core.PrevBench.load()
+    val prevBench = try graft.core.PrevBench.load(sfDir)
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] prev load failed: ${e.getMessage}"); None
     }

@@ -2,8 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.lanes result → parquet,
+  * plus oracle_sql.json (the `Exact` lanes' DuckDB SQL) and rows_only.json
+  * (the `RowsOnly` lanes' reasons), for the DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // r13 VERDICT task 7: a stray barrier A/B override would dump a mutant
@@ -24,16 +25,15 @@ object Verify {
     import org.apache.spark.sql.types.TimestampType
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val lanes = SparkEntry.lanes.filter(l => only.forall(_.contains(l.name)))
+    lanes.foreach { case Lane(name, build, check) =>
       try {
-        val df = fn(spark, sfDir)
+        val df = build(spark, sfDir)
         // Hard guard (round-1 regression): the driver canonicalizes rows
         // with a pandas sort, which cannot hash array/map/struct cells —
         // such a column fails the gate even when values match. Serialize
         // (array_join/to_json) in the query's final projection instead.
-        if (SparkEntry.oracleSql.contains(name)) {
+        if (check.isInstanceOf[Exact]) {
           val bad = df.schema.fields.filter(f => f.dataType match {
             case _: ArrayType | _: MapType | _: StructType => true
             case _ => false
@@ -70,10 +70,13 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def write(file: String, entries: Seq[(String, String)]): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        entries.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+    // A rows-only lane that failed has no result dir; declaring it here lets
+    // the compare count it as a failure instead of never seeing it.
+    write("oracle_sql.json", lanes.collect { case Lane(n, _, Exact(sql)) => n -> sql })
+    write("rows_only.json", lanes.collect { case Lane(n, _, RowsOnly(why)) => n -> why })
     spark.stop()
   }
 }

@@ -45,6 +45,26 @@ object PrevBench {
     m.flatMap(g => scala.util.Try(g.group(1).toDouble).toOption)
   }
 
+  /** The total `value`. In a wrapped artifact it is read from `parsed`:
+    * the `tail` fragment before it holds other `value` fields (the `bars`
+    * block's), so the first match in the whole text is not the total. */
+  private def totalOf(text: String): Option[Double] = {
+    val parsed = "\"parsed\"\\s*:\\s*\\{".r.findFirstMatchIn(text)
+    num(parsed.fold(text)(m => text.substring(m.start)), "value")
+  }
+
+  /** The scale factor an artifact was measured at: its first `sf` field,
+    * either the wrapper's number (`"sf": 0.1`) or the line's data dir
+    * (`"sf":"/data/sf0.1"`). */
+  private def scale(text: String): Option[Double] =
+    "\\\\?\"sf\\\\?\"\\s*:\\s*\\\\?\"?([^\",}\\\\]*)".r.findAllMatchIn(text)
+      .flatMap(m => scaleOf(m.group(1))).nextOption()
+
+  /** `0.1` or `/data/sf0.1` → 0.1. */
+  private def scaleOf(sf: String): Option[Double] =
+    "(?:^|sf)([0-9]+(?:\\.[0-9]+)?)$".r.findFirstMatchIn(sf.trim.stripSuffix("/"))
+      .flatMap(m => scala.util.Try(m.group(1).toDouble).toOption)
+
   /** Lane times from a region that follows a `"queries":{` opener. */
   private def laneTimes(region: String): Map[String, Double] =
     "\\\\?\"(q[0-9][0-9a-z_]+)\\\\?\"\\s*:\\s*(-?[0-9][0-9.eE+-]*)".r
@@ -53,8 +73,10 @@ object PrevBench {
       .toMap
 
   /** Locate the previous BENCH artifact: explicit env wins, else the
-    * highest-numbered BENCH_r*.json in the working directory that is NOT
-    * this round's own artifact.
+    * highest-numbered BENCH_r*.json in the working directory that was
+    * measured at this run's scale factor (`sfDir`) and is NOT this round's
+    * own artifact. An artifact at another scale is no baseline: an sf0.01
+    * run against an sf0.1 artifact reads as a 30× speed-up.
     *
     * Self-exclusion (r13 ADVICE): on an intra-round bench RE-run the driver
     * has already wrapped this round's first run into BENCH_r{N}.json, and
@@ -82,7 +104,7 @@ object PrevBench {
     *     its fingerprint is stale and is ignored entirely. An intra-round
     *     re-run's bench_result.json is always newer than the previous
     *     round's markers, so the genuine exclusion case still fires. */
-  def locate(dir: java.io.File =
+  def locate(sfDir: String, dir: java.io.File =
       new java.io.File(sys.props.getOrElse("user.dir", "."))): Option[java.io.File] =
     sys.env.get("SPARK_GRAFT_PREV_BENCH").map(new java.io.File(_))
       .filter(_.isFile)
@@ -98,17 +120,18 @@ object PrevBench {
           if (!f.isFile || f.lastModified <= roundClosedAt) None
           else {
             val text = read(f)
-            num(text, "anchor_s").map(a => (r3(a), num(text, "value").map(r3)))
+            num(text, "anchor_s").map(a => (r3(a), totalOf(text).map(r3)))
           }
         }
         Option(dir.listFiles()).toSeq.flatten
-          .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
+          .filter(f => f.getName.matches("BENCH_r\\d+\\.json") &&
+            scale(read(f)) == scaleOf(sfDir))
           .sortBy(f => f.getName.replaceAll("\\D", "").toInt)
           .filterNot { f =>
             own.exists { case (anchor, total) =>
               val text = read(f)
               num(text, "anchor_s").map(r3).contains(anchor) && {
-                val candTotal = num(text, "value").map(r3)
+                val candTotal = totalOf(text).map(r3)
                 // corroborate on the total when both sides carry it
                 total.isEmpty || candTotal.isEmpty || total == candTotal
               }
@@ -117,7 +140,7 @@ object PrevBench {
           .lastOption
       }
 
-  def load(): Option[Prev] = locate().flatMap(load)
+  def load(sfDir: String): Option[Prev] = locate(sfDir).flatMap(load)
 
   def load(f: java.io.File): Option[Prev] = {
     val text = try new String(
@@ -126,7 +149,7 @@ object PrevBench {
     for {
       a <- num(text, "anchor_s")
       io <- num(text, "anchor_io_mbps")
-      total <- num(text, "value")
+      total <- totalOf(text)
     } yield {
       // lane dict(s): every region following a `"queries":{` opener —
       // the wrapper's tail fragment and the compact line both carry the
@@ -156,7 +179,7 @@ object PrevBench {
   def report(anchorNow: Double, anchorIoNow: Double, totalNoopNow: Double,
       ingestNow: Double, streamWarmNow: Double, pushNow: Double,
       noopNow: collection.Map[String, Double],
-      prev: Option[Prev] = load(),
+      prev: Option[Prev],
       anchorMtNow: Double = -1.0): String =
     prev match {
       case None => "null"

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{Exact, Lane, RowsOnly}
 import graft.core.Tables
 
 /** Distribution analytics over the events stream: quantile fences and
@@ -1018,9 +1019,8 @@ object Analytics {
   // exactly what licenses assembling any window from per-day sketches
   // without touching user-level data again. Audit built in: the lane joins
   // the exact q69 count and emits the signed error in basis points, so a
-  // 100 TB deployment reads its own accuracy off the lane output. Approx
-  // path ⇒ rows-only gate (no portable oracle — DuckDB's approx sketches
-  // differ); WauHllSpec pins the error bound and day-slice independence.
+  // 100 TB deployment reads its own accuracy off the lane output.
+  // WauHllSpec pins the error bound and day-slice independence.
   def q71WauHll(spark: SparkSession, dir: String): DataFrame = {
     val ud = Tables.events(spark, dir)
       .select(to_date(col("ts")).as("d"), col("user_id"))
@@ -1419,60 +1419,36 @@ object Analytics {
       |WHERE abs(a.rk - b.rk) >= 10
       |ORDER BY a.wk, rank_gain DESC, a.part""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q89_lead_lag"    -> (q89LeadLag _),
-    "q91_funnel"      -> (q91Funnel _),
-    "q79_seasonal_env" -> (q79SeasonalEnvelope _),
-    "q80_rank_movers"  -> (q80RankMovers _),
-    "q77_mad"         -> (q77Mad _),
-    "q78_cusum"       -> (q78Cusum _),
-    "q71_wau_hll"     -> (q71WauHll _),
-    "q70_backtest"    -> (q70Backtest _),
-    "q69_rolling_wau" -> (q69RollingWau _),
-    "q63_regression"  -> (q63Regression _),
-    "q64_autocorr"    -> (q64Autocorr _),
-    "q48_incr_agg"    -> (q48IncrAgg _),
-    "q51_range_join"  -> (q51RangeJoin _),
-    "q53_overlap_join" -> (q53OverlapJoin _),
-    "q43_ewma"        -> (q43Ewma _),
-    "q34_sessionize"  -> (q34Sessionize _),
-    "q43_ohlc"        -> (q43Ohlc _),
-    "q36_asof_snapshot" -> (q36AsofSnapshot _),
-    "q43_gapfill"     -> (q43Gapfill _),
-    "q43_locf"        -> (q43Locf _),
-    "q36_scd2"        -> (q36Scd2 _),
-    "q34_gaps"        -> (q34Gaps _),
-    "q34_outliers"    -> (q34Outliers _),
-    "q34_histogram"   -> (q34Histogram _),
-    "q34_retention"   -> (q34Retention _),
-    "q34_transitions" -> (q34Transitions _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q89_lead_lag", q89LeadLag, Exact(q89LeadLagSql)),
+    Lane("q91_funnel", q91Funnel, Exact(q91FunnelSql)),
+    Lane("q79_seasonal_env", q79SeasonalEnvelope, Exact(q79SeasonalEnvelopeSql)),
+    Lane("q80_rank_movers", q80RankMovers, Exact(q80RankMoversSql)),
+    Lane("q77_mad", q77Mad, Exact(q77MadSql)),
+    Lane("q78_cusum", q78Cusum, Exact(q78CusumSql)),
+    Lane("q71_wau_hll", q71WauHll, RowsOnly(
+      "HLL sketch-union estimate, and DuckDB's approximate sketches " +
+      "differ; WauHllSpec pins the error bound")),
+    Lane("q70_backtest", q70Backtest, Exact(q70BacktestSql)),
+    Lane("q69_rolling_wau", q69RollingWau, Exact(q69RollingWauSql)),
+    Lane("q63_regression", q63Regression, Exact(q63RegressionSql)),
+    Lane("q64_autocorr", q64Autocorr, Exact(q64AutocorrSql)),
+    Lane("q48_incr_agg", q48IncrAgg, Exact(q48IncrAggSql)),
+    Lane("q51_range_join", q51RangeJoin, Exact(q51RangeJoinSql)),
+    Lane("q53_overlap_join", q53OverlapJoin, Exact(q53OverlapJoinSql)),
+    Lane("q43_ewma", q43Ewma, Exact(q43EwmaSql)),
+    Lane("q34_sessionize", q34Sessionize, Exact(q34SessionizeSql)),
+    Lane("q43_ohlc", q43Ohlc, Exact(q43OhlcSql)),
+    Lane("q36_asof_snapshot", q36AsofSnapshot, Exact(q36AsofSnapshotSql)),
+    Lane("q43_gapfill", q43Gapfill, Exact(q43GapfillSql)),
+    Lane("q43_locf", q43Locf, Exact(q43LocfSql)),
+    Lane("q36_scd2", q36Scd2, Exact(q36Scd2Sql)),
+    Lane("q34_gaps", q34Gaps, Exact(q34GapsSql)),
+    Lane("q34_outliers", q34Outliers, Exact(q34OutliersSql)),
+    Lane("q34_histogram", q34Histogram, Exact(q34HistogramSql)),
+    Lane("q34_retention", q34Retention, Exact(q34RetentionSql)),
+    Lane("q34_transitions", q34Transitions, Exact(q34TransitionsSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q89_lead_lag"    -> q89LeadLagSql,
-    "q91_funnel"      -> q91FunnelSql,
-    "q79_seasonal_env" -> q79SeasonalEnvelopeSql,
-    "q80_rank_movers"  -> q80RankMoversSql,
-    "q77_mad"         -> q77MadSql,
-    "q78_cusum"       -> q78CusumSql,
-    "q70_backtest"    -> q70BacktestSql,
-    "q69_rolling_wau" -> q69RollingWauSql,
-    "q63_regression"  -> q63RegressionSql,
-    "q64_autocorr"    -> q64AutocorrSql,
-    "q48_incr_agg"    -> q48IncrAggSql,
-    "q51_range_join"  -> q51RangeJoinSql,
-    "q53_overlap_join" -> q53OverlapJoinSql,
-    "q43_ewma"        -> q43EwmaSql,
-    "q34_sessionize"  -> q34SessionizeSql,
-    "q43_ohlc"        -> q43OhlcSql,
-    "q36_asof_snapshot" -> q36AsofSnapshotSql,
-    "q43_gapfill"     -> q43GapfillSql,
-    "q43_locf"        -> q43LocfSql,
-    "q36_scd2"        -> q36Scd2Sql,
-    "q34_gaps"        -> q34GapsSql,
-    "q34_outliers"    -> q34OutliersSql,
-    "q34_histogram"   -> q34HistogramSql,
-    "q34_retention"   -> q34RetentionSql,
-    "q34_transitions" -> q34TransitionsSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

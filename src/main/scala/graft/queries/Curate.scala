@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Exact, Lane}
 import graft.core.Tables
 
 /** Q52: the END-TO-END training-data curation pipeline — every stage the
@@ -201,9 +202,9 @@ object Curate {
        |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q52_curate_e2e" -> (q52CurateE2e _))
+  val lanes: Seq[Lane] = Seq(
+    Lane("q52_curate_e2e", q52CurateE2e, Exact(q52CurateE2eSql)),
+  )
 
-  val oracle: Map[String, String] = Map(
-    "q52_curate_e2e" -> q52CurateE2eSql)
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{Exact, Lane}
 import graft.core.Tables
 
 /** Entity-resolution and cohort-shaping operators: blocked fuzzy record
@@ -220,8 +221,9 @@ object Entity {
   // is n − distinct, a difference of two large near-equal numbers, so
   // sketch noise (±rsd·n) swamps small true violation counts and can even
   // go NEGATIVE, flipping a passing verdict — MEASURED at 32× via the
-  // ApproxDistinctRule flag (tools/DqScale): orders.o_orderkey reported
-  // −272 667 "violations" on a perfectly-unique 4.8 M-key column. The
+  // ApproxDistinctRule flag (PLANS.md, "q49_dq 32× rehearsal"):
+  // orders.o_orderkey reported −272 667 "violations" on a
+  // perfectly-unique 4.8 M-key column. The
   // sound approx gate is therefore thresholded: passed = violations ≤
   // rsd·n (detects gross duplication, never certifies exact uniqueness);
   // columns needing an EXACT verdict keep the exact branch. Counts here
@@ -988,39 +990,23 @@ object Entity {
       |FROM deg LEFT JOIN ic ON deg.community = ic.community CROSS JOIN mt
       |ORDER BY deg.community""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q88_hits"          -> (q88Hits _),
-    "q86_modularity"    -> (q86Modularity _),
-    "q83_degree_dist"   -> (q83DegreeDist _),
-    "q81_apriori_rules" -> (q81AprioriRules _),
-    "q82_gini"          -> (q82Gini _),
-    "q74_assortativity" -> (q74Assortativity _),
-    "q73_kcore"       -> (q73Kcore _),
-    "q47_ldiversity"  -> (q47Ldiversity _),
-    "q67_cooccur_sim" -> (q67CooccurSim _),
-    "q62_triangles"  -> (q62Triangles _),
-    "q55_pagerank"   -> (q55PageRank _),
-    "q47_linkage"    -> (q47Linkage _),
-    "q47_kanon"      -> (q47Kanon _),
-    "q15_ntile_bins" -> (q15NtileBins _),
-    "q49_dq"         -> (q49Dq _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q88_hits", q88Hits, Exact(q88HitsSql)),
+    Lane("q86_modularity", q86Modularity, Exact(q86ModularitySql)),
+    Lane("q83_degree_dist", q83DegreeDist, Exact(q83DegreeDistSql)),
+    Lane("q81_apriori_rules", q81AprioriRules, Exact(q81AprioriRulesSql)),
+    Lane("q82_gini", q82Gini, Exact(q82GiniSql)),
+    Lane("q74_assortativity", q74Assortativity, Exact(q74AssortativitySql)),
+    Lane("q73_kcore", q73Kcore, Exact(q73KcoreSql)),
+    Lane("q47_ldiversity", q47Ldiversity, Exact(q47LdiversitySql)),
+    Lane("q67_cooccur_sim", q67CooccurSim, Exact(q67CooccurSimSql)),
+    Lane("q62_triangles", q62Triangles, Exact(q62TrianglesSql)),
+    Lane("q55_pagerank", q55PageRank, Exact(q55PageRankSql)),
+    Lane("q47_linkage", q47Linkage, Exact(q47LinkageSql)),
+    Lane("q47_kanon", q47Kanon, Exact(q47KanonSql)),
+    Lane("q15_ntile_bins", q15NtileBins, Exact(q15NtileBinsSql)),
+    Lane("q49_dq", q49Dq, Exact(q49DqSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q88_hits"          -> q88HitsSql,
-    "q86_modularity"    -> q86ModularitySql,
-    "q83_degree_dist"   -> q83DegreeDistSql,
-    "q81_apriori_rules" -> q81AprioriRulesSql,
-    "q82_gini"          -> q82GiniSql,
-    "q74_assortativity" -> q74AssortativitySql,
-    "q73_kcore"       -> q73KcoreSql,
-    "q47_ldiversity"  -> q47LdiversitySql,
-    "q67_cooccur_sim" -> q67CooccurSimSql,
-    "q62_triangles"  -> q62TrianglesSql,
-    "q55_pagerank"   -> q55PageRankSql,
-    "q47_linkage"    -> q47LinkageSql,
-    "q47_kanon"      -> q47KanonSql,
-    "q15_ntile_bins" -> q15NtileBinsSql,
-    "q49_dq"         -> q49DqSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

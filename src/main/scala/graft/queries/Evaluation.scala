@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{Exact, Lane}
 import graft.core.Tables
 
 /** Model/segment EVALUATION statistics at warehouse scale: exact AUC by the
@@ -414,21 +415,14 @@ object Evaluation {
       |                        AS DOUBLE))) AS rho
       |FROM s ORDER BY cohort""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q65_auc"         -> (q65Auc _),
-    "q66_chisq_drift" -> (q66ChisqDrift _),
-    "q68_calibration" -> (q68Calibration _),
-    "q72_benford"     -> (q72Benford _),
-    "q84_ks_drift"    -> (q84KsDrift _),
-    "q85_spearman"    -> (q85Spearman _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q65_auc", q65Auc, Exact(q65AucSql)),
+    Lane("q66_chisq_drift", q66ChisqDrift, Exact(q66ChisqDriftSql)),
+    Lane("q68_calibration", q68Calibration, Exact(q68CalibrationSql)),
+    Lane("q72_benford", q72Benford, Exact(q72BenfordSql)),
+    Lane("q84_ks_drift", q84KsDrift, Exact(q84KsDriftSql)),
+    Lane("q85_spearman", q85Spearman, Exact(q85SpearmanSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q65_auc"         -> q65AucSql,
-    "q66_chisq_drift" -> q66ChisqDriftSql,
-    "q68_calibration" -> q68CalibrationSql,
-    "q72_benford"     -> q72BenfordSql,
-    "q84_ks_drift"    -> q84KsDriftSql,
-    "q85_spearman"    -> q85SpearmanSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

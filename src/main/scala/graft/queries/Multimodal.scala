@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Exact, Lane}
 import graft.core.Tables
 import TextOps.{h60, h60d}
 
@@ -782,27 +783,17 @@ object Multimodal {
        |ORDER BY img_a, img_b""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q32_phash_dup"    -> (q32PhashDup _),
-    "q32_media_meta"   -> (q32MediaMeta _),
-    "q32_frame_sample" -> (q32FrameSample _),
-    "q32_embed_stub"   -> (q32EmbedStub _),
-    "q32_resize_plan"  -> (q32ResizePlan _),
-    "q32_decode"       -> (q32Decode _),
-    "q32_pixel_embed"  -> (q32PixelEmbed _),
-    "q32_audio_decode" -> (q32AudioDecode _),
-    "q32_video_frames" -> (q32VideoFrames _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q32_phash_dup", q32PhashDup, Exact(q32PhashDupSql)),
+    Lane("q32_media_meta", q32MediaMeta, Exact(q32MediaMetaSql)),
+    Lane("q32_frame_sample", q32FrameSample, Exact(q32FrameSampleSql)),
+    Lane("q32_embed_stub", q32EmbedStub, Exact(q32EmbedStubSql)),
+    Lane("q32_resize_plan", q32ResizePlan, Exact(q32ResizePlanSql)),
+    Lane("q32_decode", q32Decode, Exact(q32DecodeSql)),
+    Lane("q32_pixel_embed", q32PixelEmbed, Exact(q32PixelEmbedSql)),
+    Lane("q32_audio_decode", q32AudioDecode, Exact(q32AudioDecodeSql)),
+    Lane("q32_video_frames", q32VideoFrames, Exact(q32VideoFramesSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q32_phash_dup"    -> q32PhashDupSql,
-    "q32_video_frames" -> q32VideoFramesSql,
-    "q32_media_meta"   -> q32MediaMetaSql,
-    "q32_frame_sample" -> q32FrameSampleSql,
-    "q32_embed_stub"   -> q32EmbedStubSql,
-    "q32_resize_plan"  -> q32ResizePlanSql,
-    "q32_decode"       -> q32DecodeSql,
-    "q32_pixel_embed"  -> q32PixelEmbedSql,
-    "q32_audio_decode" -> q32AudioDecodeSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.{Exact, Lane, RowsOnly}
 import graft.core.Tables
 
 /** Relational query surface Q1–Q22 of `SURVEY.md` §2B — the layer the
@@ -296,14 +297,14 @@ object Relational {
       |       CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_cust
       |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // --- Q13 [bench-only]: HLL approx distinct (no oracle — approximate) ----
+  // --- Q13: HLL approx distinct ------------------------------------------
   def q13(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(approx_count_distinct(col("user_id")).as("approx_users"))
       .orderBy(col("day"))
 
-  // --- Q13b [bench-only]: HLL sketch-merge proof (no oracle — approximate) -
+  // --- Q13b: HLL sketch-merge proof --------------------------------------
   // The property the q37 100 TB swap-in (approx_count_distinct replacing
   // COUNT DISTINCT) actually relies on: HLL sketches are LOSSLESSLY
   // mergeable, so per-partition sketches unioned equal one global sketch —
@@ -610,65 +611,40 @@ object Relational {
       |FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)
       |ORDER BY doc_id""".stripMargin
 
-  /** queries-map fragment for SparkEntry */
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_scan_filter_project" -> (q01 _),
-    "q02_keyset_page"         -> (q02 _),
-    "q03_partition_audit"     -> (q03 _),
-    "q04_batch_sizing"        -> (q04 _),
-    "q04_sizing_scalable"     -> (q04Scalable _),
-    "q05_dedup_latest"        -> (q05 _),
-    "q06_dedup_exact"         -> (q06 _),
-    "q07_join_3way"           -> (q07 _),
-    "q08_broadcast_join"      -> (q08 _),
-    "q09_semi_join"           -> (q09Semi _),
-    "q09_anti_join"           -> (q09Anti _),
-    "q10_asof_join"           -> (q10 _),
-    "q11_hash_agg"            -> (q11 _),
-    "q12_count_distinct"      -> (q12 _),
-    "q13_approx_distinct"     -> (q13 _),
-    "q13_hll_merge"           -> (q13HllMerge _), // rows-only: sketch estimates have no SQL oracle
-    "q14_rollup"              -> (q14 _),
-    "q15_rank_topk"           -> (q15Rank _),
-    "q15_running_sum"         -> (q15Running _),
-    "q15_lag_lead"            -> (q15LagLead _),
-    "q16_global_topk"         -> (q16 _),
-    "q50_topk_phys"           -> (q50TopkPhys _),
-    "q17_set_ops"             -> (q17 _),
-    "q18_string_funcs"        -> (q18 _),
-    "q19_datetime_funcs"      -> (q19 _),
-    "q20_math_funcs"          -> (q20 _),
-    "q21_json_funcs"          -> (q21 _),
-    "q22_array_funcs"         -> (q22 _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q01_scan_filter_project", q01, Exact(q01Sql)),
+    Lane("q02_keyset_page", q02, Exact(q02Sql)),
+    Lane("q03_partition_audit", q03, Exact(q03Sql)),
+    Lane("q04_batch_sizing", q04, Exact(q04Sql)),
+    Lane("q04_sizing_scalable", q04Scalable, Exact(q04Sql)),
+    Lane("q05_dedup_latest", q05, Exact(q05Sql)),
+    Lane("q06_dedup_exact", q06, Exact(q06Sql)),
+    Lane("q07_join_3way", q07, Exact(q07Sql)),
+    Lane("q08_broadcast_join", q08, Exact(q08Sql)),
+    Lane("q09_semi_join", q09Semi, Exact(q09SemiSql)),
+    Lane("q09_anti_join", q09Anti, Exact(q09AntiSql)),
+    Lane("q10_asof_join", q10, Exact(q10Sql)),
+    Lane("q11_hash_agg", q11, Exact(q11Sql)),
+    Lane("q12_count_distinct", q12, Exact(q12Sql)),
+    Lane("q13_approx_distinct", q13, RowsOnly(
+      "HLL estimate (approx_count_distinct); DuckDB's approximate count " +
+      "uses a different sketch, so no exact oracle exists")),
+    Lane("q13_hll_merge", q13HllMerge, RowsOnly(
+      "HLL sketch estimates have no SQL oracle; HllMergeSpec pins merge " +
+      "losslessness and the error bound")),
+    Lane("q14_rollup", q14, Exact(q14Sql)),
+    Lane("q15_rank_topk", q15Rank, Exact(q15RankSql)),
+    Lane("q15_running_sum", q15Running, Exact(q15RunningSql)),
+    Lane("q15_lag_lead", q15LagLead, Exact(q15LagLeadSql)),
+    Lane("q16_global_topk", q16, Exact(q16Sql)),
+    Lane("q50_topk_phys", q50TopkPhys, Exact(q50TopkPhysSql)),
+    Lane("q17_set_ops", q17, Exact(q17Sql)),
+    Lane("q18_string_funcs", q18, Exact(q18Sql)),
+    Lane("q19_datetime_funcs", q19, Exact(q19Sql)),
+    Lane("q20_math_funcs", q20, Exact(q20Sql)),
+    Lane("q21_json_funcs", q21, Exact(q21Sql)),
+    Lane("q22_array_funcs", q22, Exact(q22Sql)),
   )
 
-  /** oracle-SQL fragment for SparkEntry (q13 omitted: approximate) */
-  val oracle: Map[String, String] = Map(
-    "q01_scan_filter_project" -> q01Sql,
-    "q02_keyset_page"         -> q02Sql,
-    "q03_partition_audit"     -> q03Sql,
-    "q04_batch_sizing"        -> q04Sql,
-    "q04_sizing_scalable"     -> q04Sql,
-    "q05_dedup_latest"        -> q05Sql,
-    "q06_dedup_exact"         -> q06Sql,
-    "q07_join_3way"           -> q07Sql,
-    "q08_broadcast_join"      -> q08Sql,
-    "q09_semi_join"           -> q09SemiSql,
-    "q09_anti_join"           -> q09AntiSql,
-    "q10_asof_join"           -> q10Sql,
-    "q11_hash_agg"            -> q11Sql,
-    "q12_count_distinct"      -> q12Sql,
-    "q14_rollup"              -> q14Sql,
-    "q15_rank_topk"           -> q15RankSql,
-    "q15_running_sum"         -> q15RunningSql,
-    "q15_lag_lead"            -> q15LagLeadSql,
-    "q16_global_topk"         -> q16Sql,
-    "q50_topk_phys"           -> q50TopkPhysSql,
-    "q17_set_ops"             -> q17Sql,
-    "q18_string_funcs"        -> q18Sql,
-    "q19_datetime_funcs"      -> q19Sql,
-    "q20_math_funcs"          -> q20Sql,
-    "q21_json_funcs"          -> q21Sql,
-    "q22_array_funcs"         -> q22Sql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

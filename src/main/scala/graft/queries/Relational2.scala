@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.{Exact, Lane}
 import graft.core.Tables
 
 /** Second-tier relational surface: pivot, ranking distributions, extended
@@ -577,45 +578,26 @@ object Relational2 {
        |FROM s ORDER BY l_returnflag""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q44_stats"       -> (q44Stats _),
-    "q18_encode_funcs" -> (q18EncodeFuncs _),
-    "q14_cube"        -> (q14Cube _),
-    "q16_null_ordering" -> (q16NullOrdering _),
-    "q11_agg_misc"    -> (q11AggMisc _),
-    "q09_scalar_subquery" -> (q09ScalarSubquery _),
-    "q20_try_funcs"   -> (q20TryFuncs _),
-    "q15_range_frame" -> (q15RangeFrame _),
-    "q22_pos_explode" -> (q22PosExplode _),
-    "q17_multiset_ops" -> (q17MultisetOps _),
-    "q20_null_funcs"  -> (q20NullFuncs _),
-    "q21_variant"     -> (q21Variant _),
-    "q14_pivot"       -> (q14Pivot _),
-    "q15_rank_dist"   -> (q15RankDist _),
-    "q18_string2"     -> (q18String2 _),
-    "q19_date2"       -> (q19Date2 _),
-    "q20_percentile"  -> (q20Percentile _),
-    "q22_map_funcs"   -> (q22MapFuncs _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q44_stats", q44Stats, Exact(q44StatsSql)),
+    Lane("q18_encode_funcs", q18EncodeFuncs, Exact(q18EncodeFuncsSql)),
+    Lane("q14_cube", q14Cube, Exact(q14CubeSql)),
+    Lane("q16_null_ordering", q16NullOrdering, Exact(q16NullOrderingSql)),
+    Lane("q11_agg_misc", q11AggMisc, Exact(q11AggMiscSql)),
+    Lane("q09_scalar_subquery", q09ScalarSubquery, Exact(q09ScalarSubquerySql)),
+    Lane("q20_try_funcs", q20TryFuncs, Exact(q20TryFuncsSql)),
+    Lane("q15_range_frame", q15RangeFrame, Exact(q15RangeFrameSql)),
+    Lane("q22_pos_explode", q22PosExplode, Exact(q22PosExplodeSql)),
+    Lane("q17_multiset_ops", q17MultisetOps, Exact(q17MultisetOpsSql)),
+    Lane("q20_null_funcs", q20NullFuncs, Exact(q20NullFuncsSql)),
+    Lane("q21_variant", q21Variant, Exact(q21VariantSql)),
+    Lane("q14_pivot", q14Pivot, Exact(q14PivotSql)),
+    Lane("q15_rank_dist", q15RankDist, Exact(q15RankDistSql)),
+    Lane("q18_string2", q18String2, Exact(q18String2Sql)),
+    Lane("q19_date2", q19Date2, Exact(q19Date2Sql)),
+    Lane("q20_percentile", q20Percentile, Exact(q20PercentileSql)),
+    Lane("q22_map_funcs", q22MapFuncs, Exact(q22MapFuncsSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q44_stats"       -> q44StatsSql,
-    "q18_encode_funcs" -> q18EncodeFuncsSql,
-    "q14_cube"        -> q14CubeSql,
-    "q16_null_ordering" -> q16NullOrderingSql,
-    "q11_agg_misc"    -> q11AggMiscSql,
-    "q09_scalar_subquery" -> q09ScalarSubquerySql,
-    "q20_try_funcs"   -> q20TryFuncsSql,
-    "q15_range_frame" -> q15RangeFrameSql,
-    "q22_pos_explode" -> q22PosExplodeSql,
-    "q17_multiset_ops" -> q17MultisetOpsSql,
-    "q20_null_funcs"  -> q20NullFuncsSql,
-    "q21_variant"     -> q21VariantSql,
-    "q14_pivot"       -> q14PivotSql,
-    "q15_rank_dist"   -> q15RankDistSql,
-    "q18_string2"     -> q18String2Sql,
-    "q19_date2"       -> q19Date2Sql,
-    "q20_percentile"  -> q20PercentileSql,
-    "q22_map_funcs"   -> q22MapFuncsSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

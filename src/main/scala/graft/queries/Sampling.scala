@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{Exact, Lane}
 import graft.core.Tables
 import TextOps.{h60, h60d}
 
@@ -450,29 +451,18 @@ object Sampling {
        |FROM m WHERE greatest(0, (hi + 1) // 2 - lo // 2) >= 1
        |ORDER BY source, doc_id""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q54_pps_sample"   -> (q54PpsSample _),
-    "q33_hash_sample"  -> (q33HashSample _),
-    "q33_split_assign" -> (q33SplitAssign _),
-    "q33_balanced_cap" -> (q33BalancedCap _),
-    "q33_decontam"     -> (q33Decontam _),
-    "q33_decontam_bloom" -> (q33DecontamBloom _),
-    "q33_mixture"      -> (q33Mixture _),
-    "q33_resample"     -> (q33Resample _),
-    "q35_pack"         -> (q35Pack _),
-    "q23_tfidf"        -> (q23Tfidf _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q54_pps_sample", q54PpsSample, Exact(q54PpsSampleSql)),
+    Lane("q33_hash_sample", q33HashSample, Exact(q33HashSampleSql)),
+    Lane("q33_split_assign", q33SplitAssign, Exact(q33SplitAssignSql)),
+    Lane("q33_balanced_cap", q33BalancedCap, Exact(q33BalancedCapSql)),
+    Lane("q33_decontam", q33Decontam, Exact(q33DecontamSql)),
+    Lane("q33_decontam_bloom", q33DecontamBloom, Exact(q33DecontamSql)), // same answer, bloom route
+    Lane("q33_mixture", q33Mixture, Exact(q33MixtureSql)),
+    Lane("q33_resample", q33Resample, Exact(q33ResampleSql)),
+    Lane("q35_pack", q35Pack, Exact(q35PackSql)),
+    Lane("q23_tfidf", q23Tfidf, Exact(q23TfidfSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q54_pps_sample"   -> q54PpsSampleSql,
-    "q33_hash_sample"  -> q33HashSampleSql,
-    "q33_split_assign" -> q33SplitAssignSql,
-    "q33_balanced_cap" -> q33BalancedCapSql,
-    "q33_decontam"     -> q33DecontamSql,
-    "q33_decontam_bloom" -> q33DecontamSql, // same answer, bloom route
-    "q33_mixture"      -> q33MixtureSql,
-    "q33_resample"     -> q33ResampleSql,
-    "q35_pack"         -> q35PackSql,
-    "q23_tfidf"        -> q23TfidfSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{Exact, Lane, RowsOnly}
 import graft.core.Tables
 import TextOps.{h60, h60d}
 
@@ -1378,11 +1379,9 @@ object Similarity {
   // per-list size and centroid count grow together, keeping both the
   // assignment broadcast and the probed lists bounded), floored at IvfK and
   // capped at 4096 so the broadcast centroid table stays ≤ ~8 MB at 256
-  // dims. Not bit-exactly oracle-checkable BY DESIGN (float summation order
-  // is partition-nondeterministic); audited instead by IvfScaleSpec —
-  // component-wise ε-match against the exact-mean quantizer at equal K, and
-  // recall@10 tolerance at sf0.1 — and benched as the rows-only lane
-  // q25_ivf_scale (same contract as q13's HLL).
+  // dims. Audited by IvfScaleSpec — component-wise ε-match against the
+  // exact-mean quantizer at equal K, and recall@10 tolerance at sf0.1 — and
+  // benched as the lane q25_ivf_scale.
   private[graft] def kForCorpus(n: Long): Int =
     math.max(IvfK, math.min(4096, math.round(math.sqrt(n.toDouble)).toInt))
 
@@ -1413,8 +1412,7 @@ object Similarity {
     * partial collapses to K buffers per partition before the single
     * Exchange; no crossJoin fan-out, no posexplode, no dims-wide
     * expression plan. Per-partition sum order is scan order — exactly as
-    * order-free as a cell formulation (this lane's documented reason for
-    * being rows-only). */
+    * order-free as a cell formulation. */
   private[graft] def ivfMeansFromSeeds(
       e: DataFrame, seeds: Seq[(Long, Seq[Double])]): DataFrame =
     e.withColumn("cid", nearestCidLocal(seeds))
@@ -2102,12 +2100,9 @@ object Similarity {
   // the number that says whether training the quantizer bought anything.
   // (The planted `label` column is NOT a geometric clustering — measured:
   // within-label spread ~5× the between-centroid distance — so no purity
-  // audit is possible on this corpus.) Rows-only by design: vec_avg
-  // partial sums are IEEE-order-dependent at the last ULP (same reason as
-  // q25_ivf_scale), and the iteration structure is not expressible in one
-  // DuckDB query; KMeansSpec carries the correctness load (brute-force
-  // assignment parity, SSE monotonicity, planted-cluster recovery across
-  // partitionings on a constructed separable set).
+  // audit is possible on this corpus.) KMeansSpec carries the correctness
+  // load (brute-force assignment parity, SSE monotonicity, planted-cluster
+  // recovery across partitionings on a constructed separable set).
   def q25Kmeans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
@@ -2142,11 +2137,9 @@ object Similarity {
   // reads, not a scan). Codebook training cost is PqIters aggregation
   // passes regardless of corpus size.
   //
-  // Rows-only by design (like q25_kmeans / q25_ivf_scale): the Lloyd loop
-  // is iterative driver-held state a DuckDB oracle cannot replay in one
-  // SQL statement. Quality + determinism are spec-pinned instead
-  // (PqAdcSpec: ADC≡reconstructed-distance identity, partitioning
-  // invariance, recall floors vs the exact top-10).
+  // Quality + determinism are spec-pinned (PqAdcSpec:
+  // ADC≡reconstructed-distance identity, partitioning invariance, recall
+  // floors vs the exact top-10).
   private[graft] val PqM = 8; private[graft] val PqDim = 8
   private val PqKs = 16
   private val PqIters = 3
@@ -2495,62 +2488,42 @@ object Similarity {
        |ORDER BY cosine DESC, vec_a, vec_b LIMIT 20""".stripMargin
   }
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q92_containment"    -> (q92Containment _),
-    "q93_containment_full" -> (q93ContainmentFull _),
-    "q24_jaccard_sample" -> (q24JaccardSample _),
-    "q25_embed_sample"  -> (q25EmbedSample _),
-    "q56_jl_project"    -> (q56JlProject _),
-    "q25_pq_adc"        -> (q25PqAdc _), // rows-only: iterative driver-held Lloyd codebooks (see scaladoc)
-    "q25_kmeans"        -> (q25Kmeans _), // rows-only: iterative + order-dependent float sums (see scaladoc)
-    "q26_incr_neardup"  -> (q26IncrNeardup _),
-    "q29_neardup_batch" -> (q29NeardupBatch _),
-    "q33_decontam_fuzzy" -> (q33DecontamFuzzy _),
-    "q26_span_dup"      -> (q26SpanDup _),
-    "q26_dedup_survivors" -> (q26DedupSurvivors _),
-    "q26_semantic_dedup"  -> (q26SemanticDedup _),
-    "q26_quality_survivors" -> (q26QualitySurvivors _),
-    "q26_cc_clusters"     -> (q26CcClusters _),
-    "q24_jaccard_pairs" -> (q24JaccardPairs _),
-    "q24_minhash_sig"   -> (q24MinhashSig _),
-    "q24_lang_sketch"   -> (q24LangSketch _),
-    "q24_lsh_pairs"     -> (q24LshPairs _),
-    "q24_lsh_est"       -> (q24LshEst _),
-    "q24_simhash_pairs" -> (q24SimhashPairs _),
-    "q25_cosine_topk"   -> (q25CosineTopk _),
-    "q25_embed_neardup" -> (q25EmbedNearDup _),
-    "q25_ann_bucket"    -> (q25AnnBucket _),
-    "q25_ivf_topk"      -> (q25IvfTopk _),
-    "q25_ivf_recall"    -> (q25IvfRecall _),
-    "q25_ivf_scale"     -> (q25IvfScale _), // rows-only: avg() mean is order-nondeterministic (see scaladoc)
-    "q25_quantize"      -> (q25Quantize _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q92_containment", q92Containment, Exact(q92ContainmentSql)),
+    Lane("q93_containment_full", q93ContainmentFull, Exact(q93ContainmentFullSql)),
+    Lane("q24_jaccard_sample", q24JaccardSample, Exact(q24JaccardSampleSql)),
+    Lane("q25_embed_sample", q25EmbedSample, Exact(q25EmbedSampleSql)),
+    Lane("q56_jl_project", q56JlProject, Exact(q56JlProjectSql)),
+    Lane("q25_pq_adc", q25PqAdc, RowsOnly(
+      "iterative driver-held Lloyd codebooks that no single DuckDB " +
+      "query replays; PqAdcSpec pins the ADC identity and recall floors")),
+    Lane("q25_kmeans", q25Kmeans, RowsOnly(
+      "iterative Lloyd rounds over order-dependent float sums; " +
+      "KMeansSpec pins assignment parity and SSE monotonicity")),
+    Lane("q26_incr_neardup", q26IncrNeardup, Exact(q26IncrNeardupSql)),
+    Lane("q29_neardup_batch", q29NeardupBatch, Exact(q29NeardupBatchSql)),
+    Lane("q33_decontam_fuzzy", q33DecontamFuzzy, Exact(q33DecontamFuzzySql)),
+    Lane("q26_span_dup", q26SpanDup, Exact(q26SpanDupSql)),
+    Lane("q26_dedup_survivors", q26DedupSurvivors, Exact(q26DedupSurvivorsSql)),
+    Lane("q26_semantic_dedup", q26SemanticDedup, Exact(q26SemanticDedupSql)),
+    Lane("q26_quality_survivors", q26QualitySurvivors, Exact(q26QualitySurvivorsSql)),
+    Lane("q26_cc_clusters", q26CcClusters, Exact(q26CcClustersSql)),
+    Lane("q24_jaccard_pairs", q24JaccardPairs, Exact(q24JaccardPairsSql)),
+    Lane("q24_minhash_sig", q24MinhashSig, Exact(q24MinhashSigSql)),
+    Lane("q24_lang_sketch", q24LangSketch, Exact(q24LangSketchSql)),
+    Lane("q24_lsh_pairs", q24LshPairs, Exact(q24LshPairsSql)),
+    Lane("q24_lsh_est", q24LshEst, Exact(q24LshEstSql)),
+    Lane("q24_simhash_pairs", q24SimhashPairs, Exact(q24SimhashPairsSql)),
+    Lane("q25_cosine_topk", q25CosineTopk, Exact(q25CosineTopkSql)),
+    Lane("q25_embed_neardup", q25EmbedNearDup, Exact(q25EmbedNearDupSql)),
+    Lane("q25_ann_bucket", q25AnnBucket, Exact(q25AnnBucketSql)),
+    Lane("q25_ivf_topk", q25IvfTopk, Exact(q25IvfTopkSql)),
+    Lane("q25_ivf_recall", q25IvfRecall, Exact(q25IvfRecallSql)),
+    Lane("q25_ivf_scale", q25IvfScale, RowsOnly(
+      "centroid means are float sums whose order varies with " +
+      "partitioning; IvfScaleSpec checks an epsilon match and recall@10")),
+    Lane("q25_quantize", q25Quantize, Exact(q25QuantizeSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q92_containment"    -> q92ContainmentSql,
-    "q93_containment_full" -> q93ContainmentFullSql,
-    "q24_jaccard_sample" -> q24JaccardSampleSql,
-    "q25_embed_sample"  -> q25EmbedSampleSql,
-    "q56_jl_project"    -> q56JlProjectSql,
-    "q26_incr_neardup"  -> q26IncrNeardupSql,
-    "q29_neardup_batch" -> q29NeardupBatchSql,
-    "q33_decontam_fuzzy" -> q33DecontamFuzzySql,
-    "q26_span_dup"      -> q26SpanDupSql,
-    "q26_dedup_survivors" -> q26DedupSurvivorsSql,
-    "q26_semantic_dedup"  -> q26SemanticDedupSql,
-    "q26_quality_survivors" -> q26QualitySurvivorsSql,
-    "q26_cc_clusters"     -> q26CcClustersSql,
-    "q24_jaccard_pairs" -> q24JaccardPairsSql,
-    "q24_minhash_sig"   -> q24MinhashSigSql,
-    "q24_lang_sketch"   -> q24LangSketchSql,
-    "q24_lsh_pairs"     -> q24LshPairsSql,
-    "q24_lsh_est"       -> q24LshEstSql,
-    "q24_simhash_pairs" -> q24SimhashPairsSql,
-    "q25_cosine_topk"   -> q25CosineTopkSql,
-    "q25_embed_neardup" -> q25EmbedNearDupSql,
-    "q25_ann_bucket"    -> q25AnnBucketSql,
-    "q25_ivf_topk"      -> q25IvfTopkSql,
-    "q25_ivf_recall"    -> q25IvfRecallSql,
-    "q25_quantize"      -> q25QuantizeSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.{Exact, Lane, RowsOnly}
 import graft.core.Tables
 
 /** Text-analysis surface (SURVEY.md §2B Q23 + Q26): the LLM-training-pipeline
@@ -633,9 +634,7 @@ object TextOps {
   // three across merge topologies). The lane runs the sketch per lang
   // (k = 8, deliberately smaller than the vocabulary so eviction really
   // fires at test SF) and AUDITS it in place against the exact counts —
-  // every emitted row carries its own bound verdicts. Rows-only by design:
-  // the summary's exact content is merge-order-dependent inside the
-  // guaranteed band, like every sketch lane (q13, q25_ivf_scale).
+  // every emitted row carries its own bound verdicts.
   def q46HeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val toks = Tables.documents(spark, dir)
       .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
@@ -726,10 +725,9 @@ object TextOps {
   // compresses hard (high ratio), natural prose sits near ~1.5–3×. The
   // signal rides the codegen'd `deflate_len` Expression (thread-local
   // Deflater, see its scaladoc) — a pure row-local projection, zero
-  // shuffles except the presentation sort. Rows-only check (q13
-  // precedent): DuckDB has no deflate, so no cross-engine oracle exists;
-  // DeflateLenSpec pins the semantics (repetitive ≫ prose ratio,
-  // interpreted/codegen parity, determinism).
+  // shuffles except the presentation sort. DeflateLenSpec pins the
+  // semantics (repetitive ≫ prose ratio, interpreted/codegen parity,
+  // determinism).
   def q23Compress(spark: SparkSession, dir: String): DataFrame = {
     Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -1037,51 +1035,34 @@ object TextOps {
        |         // CAST(count(*) AS BIGINT) AS novelty_bp
        |FROM v WHERE in_cand = 1 GROUP BY lang ORDER BY lang""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q90_simpson"       -> (q90Simpson _),
-    "q87_ngram_novelty" -> (q87NgramNovelty _),
-    "q59_bigram_lm"   -> (q59BigramLm _),
-    "q57_bpe_merges"  -> (q57BpeMerges _),
-    "q23_tokens_pos"  -> (q23TokensPos _),
-    "q23_compress"    -> (q23Compress _),
-    "q23_redact"      -> (q23Redact _),
-    "q23_wordfreq"        -> (q23WordFreq _),
-    "q23_zipf_rank"       -> (q23ZipfRank _),
-    "q26_para_dedup"      -> (q26ParaDedup _),
-    "q23_chunks"          -> (q23Chunks _),
-    "q23_cdc_chunks"      -> (q23CdcChunks _),
-    "q23_bm25"            -> (q23Bm25 _),
-    "q46_heavy_hitters"   -> (q46HeavyHitters _),
-    "q23_top_terms"       -> (q23TopTerms _),
-    "q23_lang_id"         -> (q23LangId _),
-    "q23_quality"         -> (q23Quality _),
-    "q23_filter_verdict"  -> (q23FilterVerdict _),
-    "q23_token_count"     -> (q23TokenCount _),
-    "q23_fingerprint"     -> (q23Fingerprint _),
-    "q23_repetition"      -> (q23Repetition _),
-    "q26_neardup_cluster" -> (q26NearDupCluster _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q90_simpson", q90Simpson, Exact(q90SimpsonSql)),
+    Lane("q87_ngram_novelty", q87NgramNovelty, Exact(q87NgramNoveltySql)),
+    Lane("q59_bigram_lm", q59BigramLm, Exact(q59BigramLmSql)),
+    Lane("q57_bpe_merges", q57BpeMerges, Exact(q57BpeMergesSql)),
+    Lane("q23_tokens_pos", q23TokensPos, Exact(q23TokensPosSql)),
+    Lane("q23_compress", q23Compress, RowsOnly(
+      "DuckDB has no deflate, so no cross-engine oracle exists; " +
+      "DeflateLenSpec pins the ratio semantics")),
+    Lane("q23_redact", q23Redact, Exact(q23RedactSql)),
+    Lane("q23_wordfreq", q23WordFreq, Exact(q23WordFreqSql)),
+    Lane("q23_zipf_rank", q23ZipfRank, Exact(q23ZipfRankSql)),
+    Lane("q26_para_dedup", q26ParaDedup, Exact(q26ParaDedupSql)),
+    Lane("q23_chunks", q23Chunks, Exact(q23ChunksSql)),
+    Lane("q23_cdc_chunks", q23CdcChunks, Exact(q23CdcChunksSql)),
+    Lane("q23_bm25", q23Bm25, Exact(q23Bm25Sql)),
+    Lane("q46_heavy_hitters", q46HeavyHitters, RowsOnly(
+      "the Misra-Gries summary is merge-order dependent inside its " +
+      "guaranteed band; FreqSketchSpec pins the bounds")),
+    Lane("q23_top_terms", q23TopTerms, Exact(q23TopTermsSql)),
+    Lane("q23_lang_id", q23LangId, Exact(q23LangIdSql)),
+    Lane("q23_quality", q23Quality, Exact(q23QualitySql)),
+    Lane("q23_filter_verdict", q23FilterVerdict, Exact(q23FilterVerdictSql)),
+    Lane("q23_token_count", q23TokenCount, Exact(q23TokenCountSql)),
+    Lane("q23_fingerprint", q23Fingerprint, Exact(q23FingerprintSql)),
+    Lane("q23_repetition", q23Repetition, Exact(q23RepetitionSql)),
+    Lane("q26_neardup_cluster", q26NearDupCluster, Exact(q26NearDupClusterSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q90_simpson"         -> q90SimpsonSql,
-    "q87_ngram_novelty"   -> q87NgramNoveltySql,
-    "q59_bigram_lm"       -> q59BigramLmSql,
-    "q57_bpe_merges"      -> q57BpeMergesSql,
-    "q23_tokens_pos"      -> q23TokensPosSql,
-    "q23_redact"          -> q23RedactSql,
-    "q23_wordfreq"        -> q23WordFreqSql,
-    "q23_zipf_rank"       -> q23ZipfRankSql,
-    "q26_para_dedup"      -> q26ParaDedupSql,
-    "q23_chunks"          -> q23ChunksSql,
-    "q23_cdc_chunks"      -> q23CdcChunksSql,
-    "q23_bm25"            -> q23Bm25Sql,
-    "q23_top_terms"       -> q23TopTermsSql,
-    "q23_lang_id"         -> q23LangIdSql,
-    "q23_quality"         -> q23QualitySql,
-    "q23_filter_verdict"  -> q23FilterVerdictSql,
-    "q23_token_count"     -> q23TokenCountSql,
-    "q23_fingerprint"     -> q23FingerprintSql,
-    "q23_repetition"      -> q23RepetitionSql,
-    "q26_neardup_cluster" -> q26NearDupClusterSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Exact, Lane}
 import graft.core.Tables
 
 /** Batch twins of the streaming window queries (SURVEY §2B Q27/Q28):
@@ -274,25 +275,16 @@ object Windowed {
       |WHERE w_end > (SELECT max(ts) - INTERVAL '5 minutes' FROM events)
       |ORDER BY w_start""".stripMargin
 
-  val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q41_state_read"      -> (q41StateRead _),
-    "q29_enrich_batch"    -> (q29EnrichBatch _),
-    "q34_funnel"          -> (q34Funnel _),
-    "q27_tumbling_batch"  -> (q27Tumbling _),
-    "q28_sliding_batch"   -> (q28Sliding _),
-    "q28_session_batch"   -> (q28Session _),
-    "q29_interval_batch"  -> (q29IntervalBatch _),
-    "q29_interval_outer"  -> (q29IntervalOuter _),
+  val lanes: Seq[Lane] = Seq(
+    Lane("q41_state_read", q41StateRead, Exact(q41StateReadSql)),
+    Lane("q29_enrich_batch", q29EnrichBatch, Exact(q29EnrichBatchSql)),
+    Lane("q34_funnel", q34Funnel, Exact(q34FunnelSql)),
+    Lane("q27_tumbling_batch", q27Tumbling, Exact(q27TumblingSql)),
+    Lane("q28_sliding_batch", q28Sliding, Exact(q28SlidingSql)),
+    Lane("q28_session_batch", q28Session, Exact(q28SessionSql)),
+    Lane("q29_interval_batch", q29IntervalBatch, Exact(q29IntervalBatchSql)),
+    Lane("q29_interval_outer", q29IntervalOuter, Exact(q29IntervalOuterSql)),
   )
 
-  val oracle: Map[String, String] = Map(
-    "q41_state_read"      -> q41StateReadSql,
-    "q29_enrich_batch"    -> q29EnrichBatchSql,
-    "q34_funnel"          -> q34FunnelSql,
-    "q27_tumbling_batch"  -> q27TumblingSql,
-    "q28_sliding_batch"   -> q28SlidingSql,
-    "q28_session_batch"   -> q28SessionSql,
-    "q29_interval_batch"  -> q29IntervalBatchSql,
-    "q29_interval_outer"  -> q29IntervalOuterSql,
-  )
+  val defs = lanes.map(l => l.name -> l.build).toMap
 }

@@ -145,12 +145,12 @@ class PrevBenchSpec extends AnyFunSuite {
     put("BENCH_r13.json", wrapper) // anchor_s 0.8 — "this round's" artifact
     // bench_result.json left by this round's earlier run, same anchor_s
     put("bench_result.json", """{"metric":"total_noop","anchor_s":0.8}""")
-    val picked = graft.core.PrevBench.locate(dir.toFile)
+    val picked = graft.core.PrevBench.locate("/x", dir.toFile)
     assert(picked.map(_.getName) === Some("BENCH_r12.json"),
       s"picked ${picked.map(_.getName)} — self-comparison not excluded")
     // without a bench_result.json fingerprint the highest number wins
     java.nio.file.Files.delete(dir.resolve("bench_result.json"))
-    assert(graft.core.PrevBench.locate(dir.toFile).map(_.getName)
+    assert(graft.core.PrevBench.locate("/x", dir.toFile).map(_.getName)
       === Some("BENCH_r13.json"))
   }
 
@@ -168,14 +168,14 @@ class PrevBenchSpec extends AnyFunSuite {
       .replace("\"value\":200.0", "\"value\":251.077"))
     put("bench_result.json",
       """{"metric":"total_noop","value":251.07655261900007,"anchor_s":0.916610167}""")
-    assert(graft.core.PrevBench.locate(dir.toFile).map(_.getName)
+    assert(graft.core.PrevBench.locate("/x", dir.toFile).map(_.getName)
       === Some("BENCH_r12.json"),
       "rounded-wrapper fingerprint did not exclude the round's own artifact")
     // anchor collision alone must NOT exclude when the totals disagree —
     // a genuinely different round that happens to share a rounded anchor
     put("bench_result.json",
       """{"metric":"total_noop","value":199.1,"anchor_s":0.917001}""")
-    assert(graft.core.PrevBench.locate(dir.toFile).map(_.getName)
+    assert(graft.core.PrevBench.locate("/x", dir.toFile).map(_.getName)
       === Some("BENCH_r13.json"),
       "anchor coincidence excluded a legitimate prev despite total mismatch")
   }
@@ -198,13 +198,57 @@ class PrevBenchSpec extends AnyFunSuite {
     val now = System.currentTimeMillis()
     assert(br.setLastModified(now - 3600 * 1000L))  // last round's bench run
     assert(verdict.setLastModified(now - 60 * 1000L)) // judge closed the round
-    assert(graft.core.PrevBench.locate(dir.toFile).map(_.getName)
+    assert(graft.core.PrevBench.locate("/x", dir.toFile).map(_.getName)
       === Some("BENCH_r13.json"),
       "stale bench_result.json excluded the legitimate previous-round artifact")
     // and a FRESH bench_result.json (intra-round re-run, written after the
     // close markers) keeps the exclusion live
     assert(br.setLastModified(now))
-    assert(graft.core.PrevBench.locate(dir.toFile).map(_.getName)
+    assert(graft.core.PrevBench.locate("/x", dir.toFile).map(_.getName)
       === Some("BENCH_r12.json"))
+  }
+
+  // the real BENCH_r16.json layout: the wrapper's `tail` (the end of the
+  // full line) holds the `bars` block, whose per-bar `value` fields come
+  // before the compact line's total in `parsed`
+  private val r16Layout =
+    """{
+      |  "n": 16,
+      |  "rc": 0,
+      |  "cpus": 32,
+      |  "sf": 0.1,
+      |  "tail": "\"noop_mean\":1.151,\"noop_p95\":1.848,\"anchor_s\":0.798,\"anchor_io_mbps\":199.705,\"bars\":{\"noop_mean\":{\"value\":1.151,\"bar\":5.0,\"raw_pass\":true},\"noop_p95\":{\"value\":1.848,\"bar\":10.0,\"raw_pass\":true}},\"queries\":{\"q49_dq\":1.848},\"sf\":\"/data/sf0.1\"}",
+      |  "parsed": {
+      |    "metric": "total_noop",
+      |    "value": 223.327,
+      |    "noop_mean": 1.151,
+      |    "anchor_s": 0.798,
+      |    "anchor_io_mbps": 199.705,
+      |    "bars": {"noop_mean": {"value": 1.151, "bar": 5.0, "raw_pass": true}},
+      |    "queries": {"q49_dq": 1.848},
+      |    "sf": "/data/sf0.1"
+      |  }
+      |}""".stripMargin
+
+  test("load reads the total from parsed, not from the tail's bars block") {
+    val f = java.nio.file.Files.createTempFile("prevbench_r16", ".json")
+    java.nio.file.Files.write(f, r16Layout.getBytes("UTF-8"))
+    val p = graft.core.PrevBench.load(f.toFile).get
+    assert(p.totalNoop === 223.327)
+    assert(p.anchorS === 0.798 && p.noopMean === Some(1.151))
+  }
+
+  test("locate only compares artifacts measured at this run's scale factor") {
+    val dir = java.nio.file.Files.createTempDirectory("prevbench_sf")
+    def put(name: String, text: String): Unit =
+      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+    put("BENCH_r15.json", r16Layout.replace("\"sf\": 0.1", "\"sf\": 0.01")
+      .replace("sf0.1", "sf0.01"))
+    put("BENCH_r16.json", r16Layout)
+    def pick(sfDir: String) =
+      graft.core.PrevBench.locate(sfDir, dir.toFile).map(_.getName)
+    assert(pick("/data/sf0.01") === Some("BENCH_r15.json"))
+    assert(pick("/data/sf0.1/") === Some("BENCH_r16.json"))
+    assert(pick("/data/sf1") === None, "an artifact at another scale was picked")
   }
 }

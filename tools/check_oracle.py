@@ -8,6 +8,10 @@ same sf tables, and compares row count, column names (sorted), and
 exact values (floats bit-exact) — stricter than any plausible driver
 comparison, so passing here should pass the real gate.
 
+A lane declared in <outDir>/rows_only.json ({lane: reason}) passes on a
+readable result alone. Every declared lane must have a result dir, and
+every result dir must be declared in one of the two files.
+
 Usage: python3 tools/check_oracle.py [outDir] [sfDir]
 """
 import json
@@ -69,16 +73,27 @@ def main():
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    rows_only = json.load(open(f"{out_dir}/rows_only.json"))
+    n_pass = n_fail = n_rows_only = 0
     results_dirs = {os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p)}
-    for name in sorted(set(oracle) | results_dirs):
-        if name not in oracle:
+    for name in sorted(set(oracle) | set(rows_only) | results_dirs):
+        if name in rows_only:
+            reason = rows_only[name]
+            if name not in results_dirs:
+                print(f"  ✗ {name}: rows-only lane declared but NO spark result dir ({reason})")
+                n_fail += 1
+                continue
             try:
                 n = len(pd.read_parquet(f"{out_dir}/{name}"))
-                print(f"  ~ {name}: rows-only ({n} rows)")
+                print(f"  ~ {name}: rows-only ({n} rows): {reason}")
+                n_rows_only += 1
             except Exception as e:
                 print(f"  ✗ {name}: rows-only read FAILED: {e}")
                 n_fail += 1
+            continue
+        if name not in oracle:
+            print(f"  ✗ {name}: result dir declared in neither oracle_sql.json nor rows_only.json")
+            n_fail += 1
             continue
         if name not in results_dirs:
             print(f"  ✗ {name}: oracle present but NO spark result dir")
@@ -107,7 +122,7 @@ def main():
             note = f"  [dtype diff: {dt}]" if dt else ""
             print(f"  ✓ {name} ({len(spark_df)} rows){note}")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     sys.exit(1 if n_fail else 0)
 
 
