@@ -106,13 +106,12 @@ object Bench {
     val (nRows, ingestRps, ingestRepsRps) = try {
       val ev = graft.core.Tables.events(spark, sfDir)
       val n = ev.count()
-      val width = graft.core.ApiLimitCalculator.writeWidth(n, cpus.toInt)
       // Warm the write path at FULL size, twice: a 1000-row warmup leaves
       // the full-width task/commit path cold (measured: 2 slow leading reps
       // after a tiny warmup). BASELINE.md targets steady state.
       (0 until 2).foreach { w =>
         graft.ingest.Ingest.writeBronze(ev, s"$ingestOut/warmup$w", tsCol = "ts",
-          granularity = "day", writeTasks = Some(width))
+          granularity = "day")
         rmTree(s"$ingestOut/warmup$w")
       }
       // Median of 7 reps, each rep = ingestWrites consecutive full writes
@@ -126,7 +125,7 @@ object Bench {
         val t0 = System.nanoTime()
         (0 until ingestWrites).foreach { w =>
           graft.ingest.Ingest.writeBronze(ev, s"$ingestOut/bronze${i}_$w",
-            tsCol = "ts", granularity = "day", writeTasks = Some(width))
+            tsCol = "ts", granularity = "day")
         }
         val dt = (System.nanoTime() - t0) / 1e9
         // delete the rep's output OUTSIDE the timed region
@@ -158,8 +157,8 @@ object Bench {
     // Measured twice+5: pass 1 (cold — stream-engine class-load + codegen
     // first-touch), then 5 warm passes (fresh checkpoint, same files,
     // warmed JVM). Warm median is the steady-state number a long-lived
-    // query would see. State-partition width scaled to the input like
-    // writeBronze's writeWidth: 32 state stores for ~39 k window rows
+    // query would see. State-partition width scaled to the input: 32
+    // state stores for ~39 k window rows
     // spent more time in per-partition load/commit than in the
     // aggregation (measured: 51 k rows/s warm at 32 partitions vs 79 k at
     // 4–8; phase table in PLANS.md §Round-4). ~25 k input rows per state

@@ -63,18 +63,6 @@ object ApiLimitCalculator {
   def recordsPerFile(avgRowBytes: Double): Long =
     math.max(1L, (MaxFileSizeBytes * GraceFactor / avgRowBytes).toLong)
 
-  /** Bronze-write shuffle width for a batch of `rows` rows: ~10 k rows per
-    * writer task, floored at 8 (keep some parallelism even for tiny batches)
-    * and capped at the session's shuffle width. Small batches on a wide
-    * session otherwise pay 32+ task launches + file commits to write a few
-    * thousand rows (measured: 100 k rows at width 32 ≈ 184 k rows/s, width
-    * 8-16 ≈ 235 k rows/s); huge batches get the full cluster width. */
-  def writeWidth(rows: Long, maxWidth: Int): Int =
-    // clamp in Long BEFORE narrowing: rows/10k can exceed Int.MaxValue for
-    // multi-trillion-row batches, and a wrapped-negative .toInt would
-    // collapse the write to width 1
-    math.max(1, math.min(maxWidth.toLong, math.max(8L, rows / 10_000L)).toInt)
-
   /** Streaming state-partition width for an input of `rows` rows: ~25 k
     * rows per HDFS-backed state store, floored at 4, capped at the session
     * width. 32 stores for 39 k window rows spent more in per-store

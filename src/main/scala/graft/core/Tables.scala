@@ -68,9 +68,17 @@ object Tables {
     * that one down (PushedFilters) and prunes row groups / partitions.
     * `ts >= T ⟺ ts_ns >= T_micros·1000` under micros truncation. */
   def nanosOf(tsLiteral: String): Long = {
-    val inst = java.sql.Timestamp.valueOf(tsLiteral).toInstant
+    val inst = utcInstant(tsLiteral)
     inst.getEpochSecond * 1000000000L + inst.getNano
   }
+
+  /** A naive `yyyy-MM-dd HH:mm:ss[.fffffffff]` literal read as UTC, the
+    * engine's one zone (the session zone is pinned to it). `java.sql.
+    * Timestamp`'s string parse reads the JVM default zone instead, which on
+    * a non-UTC host shifts every bound by the zone offset. */
+  def utcInstant(naive: String): java.time.Instant =
+    java.time.LocalDateTime.parse(naive.replace(' ', 'T'))
+      .toInstant(java.time.ZoneOffset.UTC)
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -1,8 +1,10 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import java.sql.Timestamp
+import java.time.Instant
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{ApiLimitCalculator, StateStore}
+import graft.core.{ApiLimitCalculator, StateStore, Tables}
 
 /** The reference's pull path (R1,R4,R5,R6,R8 — `CommCareAPIHandler.py:
   * 207-262`) as an incremental Spark batch job: landed JSON envelopes →
@@ -79,8 +81,7 @@ object Ingest {
     * where each directory holds a few hundred rows of pure per-file
     * overhead. */
   def writeBronze(df: DataFrame, outDir: String, tsCol: String = "indexed_on",
-                  avgRowBytes: Double = 512.0, granularity: String = "hour",
-                  writeTasks: Option[Int] = None): Unit = {
+                  avgRowBytes: Double = 512.0, granularity: String = "hour"): Unit = {
     val base = df
       .withColumn("year", year(col(tsCol)))
       .withColumn("month", month(col(tsCol)))
@@ -91,15 +92,9 @@ object Ingest {
         Seq("year", "month", "day", "hour"))
     }
     // One shuffle keyed on the output partitions: each output dir is written
-    // by one task (no small-files explosion); AQE splits skewed partitions.
-    // Callers that know the batch's row count pass `writeTasks`
-    // (ApiLimitCalculator.writeWidth) so tiny batches don't pay a full-width
-    // shuffle's task-launch + file-commit overhead.
-    val shuffled = writeTasks match {
-      case Some(w) => partitioned.repartition(w, partCols.map(col): _*)
-      case None    => partitioned.repartition(partCols.map(col): _*)
-    }
-    shuffled
+    // by one task (no small-files explosion). AQE sizes the write: it
+    // coalesces small batches down to a few tasks and splits skewed ones.
+    partitioned.repartition(partCols.map(col): _*)
       .write
       .mode(SaveMode.Append)
       .option("maxRecordsPerFile", ApiLimitCalculator.recordsPerFile(avgRowBytes))
@@ -241,13 +236,48 @@ object Ingest {
       .start()
   }
 
+  /** The landing step both pull paths end in (R4, R5, R8;
+    * `CommCareAPIHandler.py:239-262`). The window's lower bound is a custom
+    * range's start, inclusive (a backfill is a fresh window), or else the
+    * stored watermark read as UTC, exclusive (a resume past rows already
+    * landed); a cold start has none. `dedupKey` collapses duplicate keys
+    * after the window filter, so the range still reaches the source. The
+    * window lands in ONE write job, whose `observe` also yields the row
+    * count (`rows`) and the `metrics`; only after that write succeeds does
+    * the watermark move to `upper`, and never for a custom-range backfill
+    * (the reference guards `_save_run_time` behind `not custom_range`).
+    * Returns the observed values by name. */
+  private def landWindow(src: DataFrame, bronzeDir: String, state: StateStore,
+                         stateKey: String, upper: Instant,
+                         customRange: Option[(Instant, Instant)],
+                         dedupKey: Option[String] = None,
+                         metrics: Seq[Column] = Nil): Map[String, Any] = {
+    val ts = col("indexed_on")
+    val hi = ts <= lit(Timestamp.from(upper))
+    val inWindow = customRange match {
+      case Some((start, _)) => ts >= lit(Timestamp.from(start)) && hi
+      case None => state.get(stateKey).map(Tables.utcInstant) match {
+        case Some(lo) => ts > lit(Timestamp.from(lo)) && hi
+        case None     => hi
+      }
+    }
+    val windowed = src.filter(inWindow)
+    val window = dedupKey.fold(windowed)(windowed.dropDuplicates(_))
+    val observed = Observation()
+    writeBronze(window.observe(observed, count(lit(1)).as("rows"), metrics: _*), bronzeDir)
+    val landed = observed.get
+    if (customRange.isEmpty)
+      state.put(stateKey, upper.toString.replace("Z", "").replace("T", " "))
+    landed
+  }
+
   /** The reference's PRIMARY path composed end-to-end (R1→R4→R5→R6→R7→R8):
     * pull a watermark-bounded window from a paginated REST API via the
     * graft-rest DSv2 source (range pushdown + keyset pagination +
     * `slices`-way parallel extraction), land hour-partitioned bronze,
-    * advance the watermark only on success. `upperBound` plays the role of
-    * the reference's `event_time` (minus lag when `useLag`). Returns rows
-    * landed.
+    * advance the watermark only on success ([[landWindow]]). `upperBound`
+    * plays the role of the reference's `event_time` (minus lag when
+    * `useLag`). Returns rows landed.
     *
     * R7 calibration cycle (`CommCareAPIHandler.py:96-156`): when
     * `calibrateKey` is set, the run's page size comes from the PERSISTED
@@ -266,73 +296,48 @@ object Ingest {
     *
     * `tableOptions` carries per-table wire params
     * (`RestEnvelopeSource.tableOptions`: `form`'s include_archived,
-    * `action_times`' UTC_start_time family). */
+    * `action_times`' UTC_start_time family).
+    *
+    * The REST source is scanned once, inside the landing write: no cache,
+    * no count pass, so the API sees one pass of requests per run. */
   def restPullRun(spark: SparkSession, apiUrl: String, bronzeDir: String,
-                  state: StateStore, upperBound: java.time.Instant,
+                  state: StateStore, upperBound: Instant,
                   stateKey: String = "last_successful_job_time",
                   limit: Int = 1000, slices: Int = 4, useLag: Boolean = false,
                   calibrateKey: Option[String] = None,
                   authToken: Option[String] = None,
                   tableOptions: Map[String, String] = Map.empty,
-                  customRange: Option[(java.time.Instant, java.time.Instant)] = None)
+                  customRange: Option[(Instant, Instant)] = None)
   : Long = {
-    import org.apache.spark.sql.functions.{avg, col, length, lit}
-    val upper = java.sql.Timestamp.from(customRange match {
+    val upper = customRange match {
       case Some((_, end)) => end // custom range forces use_lag off
       case None => if (useLag) upperBound.minusSeconds(300) else upperBound
-    })
-    val lower: Option[java.sql.Timestamp] = customRange match {
-      case Some((start, _)) => Some(java.sql.Timestamp.from(start))
-      case None             => state.get(stateKey).map(java.sql.Timestamp.valueOf)
     }
     val effLimit = calibrateKey.flatMap(state.getLong).map(_.toInt).getOrElse(limit)
     val reader = spark.read.format("graft-rest")
       .option("url", apiUrl).option("limit", effLimit).option("slices", slices)
     tableOptions.foreach { case (k, v) => reader.option(k, v) }
     authToken.foreach(reader.option("auth_token", _))
-    val src = reader.load()
-    val windowed = (lower match {
-      // custom range is inclusive of its own start (a fresh window, not a
-      // `>`-resume past an already-extracted watermark row)
-      case Some(lo) if customRange.isDefined => src.filter(col("indexed_on") >= lit(lo))
-      case Some(lo) => src.filter(col("indexed_on") > lit(lo))
-      case None     => src
-    }).filter(col("indexed_on") <= lit(upper))
+    val landed = landWindow(reader.load(), bronzeDir, state, stateKey, upper, customRange,
       // R2's >=-restart duplicates boundary rows by design — collapse here
-      .dropDuplicates(Seq("id"))
-      // One external scan only: count + write below would otherwise each
-      // re-execute the REST pull from scratch — doubling API requests (each
-      // pass burns its own max_requests budget) and racing data changes
-      // between the two passes.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = windowed.count()
-      if (n > 0) {
-        val width = ApiLimitCalculator.writeWidth(
-          n, spark.conf.get("spark.sql.shuffle.partitions").toInt)
-        writeBronze(windowed, bronzeDir, writeTasks = Some(width))
-        if (customRange.isEmpty) calibrateKey.foreach { k =>
-          // R7 probe: observed bytes of one effLimit-row page at this pull's
-          // serialized density (cheap — windowed is cached). Same formula the
-          // reference applies to the probe response's Content-Length.
-          val avgRowBytes = windowed.agg(avg(length(col("payload")))).head().getDouble(0)
-          val observed = math.max(1L, (avgRowBytes * effLimit).toLong)
-          state.putLong(k, ApiLimitCalculator.newLimit(effLimit, observed).toLong)
-        }
-      }
-      // Custom ranges NEVER advance the watermark (`CommCareAPIHandler.py:
-      // 261-262` guards _save_run_time behind `not custom_range`): a
-      // backfill re-extract leaves the incremental frontier untouched.
-      if (customRange.isEmpty)
-        state.put(stateKey, upper.toInstant.toString.replace("Z", "").replace("T", " "))
-      n
-    } finally windowed.unpersist()
+      dedupKey = Some("id"),
+      metrics = Seq(avg(length(col("payload"))).as("payload_len")))
+    val n = landed("rows").asInstanceOf[Long]
+    if (n > 0 && customRange.isEmpty) calibrateKey.foreach { k =>
+      // R7 probe: observed bytes of one effLimit-row page at this pull's
+      // serialized density. Same formula the reference applies to the probe
+      // response's Content-Length.
+      val avgRowBytes = landed("payload_len").asInstanceOf[Double]
+      val observed = math.max(1L, (avgRowBytes * effLimit).toLong)
+      state.putLong(k, ApiLimitCalculator.newLimit(effLimit, observed).toLong)
+    }
+    n
   }
 
   /** One incremental run (the Q30 slice): filter the landed data to
     * `(watermark, upper]`, land to bronze, advance the watermark state only
-    * on success. `upper` defaults to max(indexed_on) − 5-minute lag (R6).
-    * Returns rows written.
+    * on success ([[landWindow]]). `upper` defaults to max(indexed_on) −
+    * 5-minute lag (R6). Returns rows written.
     *
     * CUSTOM-RANGE mode (`CommCareAPIHandler.py:158-162,261-262`;
     * `lambda_function.py:46-54`): `customRange = Some((start, end))`
@@ -344,7 +349,7 @@ object Ingest {
                      state: StateStore, stateKey: String = "last_successful_job_time",
                      useLag: Boolean = false,
                      quarantineDir: Option[String] = None,
-                     customRange: Option[(java.time.Instant, java.time.Instant)] = None)
+                     customRange: Option[(Instant, Instant)] = None)
   : Long = {
     val source = quarantineDir match {
       case Some(qd) =>
@@ -361,47 +366,25 @@ object Ingest {
         good
       case None => readEnvelopes(spark, landedJsonPath)
     }
-    // ONE scan of the landing zone for the whole run: max-ts agg, count, and
-    // bronze write all read this cached frame. Uncached, each action re-reads
-    // and re-parses the landed JSON (3 passes; 4 with the quarantine lane) —
-    // at a 100 TB landing zone JSON parsing is the dominant cost, so the
-    // scan count is the job's cost model. Mirrors restPullRun's persist.
+    // ONE scan of the landing zone for the whole run: the max-ts agg and the
+    // bronze write both read this cached frame. Uncached, each action
+    // re-reads and re-parses the landed JSON — at a 100 TB landing zone JSON
+    // parsing is the dominant cost, so the scan count is the job's cost model.
     val parsed = source
       .withColumn("indexed_on", parseIndexedOn(col("indexed_on")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val lower: Option[Column] = customRange match {
-        case Some((start, _)) => Some(lit(java.sql.Timestamp.from(start)))
-        case None             => state.get(stateKey).map(s => lit(s).cast("timestamp"))
-      }
       // Driver-side single-value agg (not a data collect): the batch's high
       // water mark. Empty landing zone ⇒ nothing to do, watermark unchanged.
-      val upperInstant: java.time.Instant = customRange match {
+      val upper = customRange match {
         case Some((_, end)) => end // custom range: fixed bound, lag forced off
         case None =>
           val maxTs = parsed.agg(max(col("indexed_on"))).head().getTimestamp(0)
           if (maxTs == null) return 0L
           if (useLag) maxTs.toInstant.minusSeconds(300) else maxTs.toInstant
       }
-      val upper = lit(java.sql.Timestamp.from(upperInstant))
-      val windowed = lower match {
-        case Some(lo) if customRange.isDefined =>
-          parsed.filter(col("indexed_on") >= lo && col("indexed_on") <= upper)
-        case Some(lo) => parsed.filter(col("indexed_on") > lo && col("indexed_on") <= upper)
-        case None     => parsed.filter(col("indexed_on") <= upper) // cold start: full range
-      }
-      val n = windowed.count()
-      if (n > 0) writeBronze(windowed, bronzeDir, writeTasks = Some(
-        ApiLimitCalculator.writeWidth(
-          n, spark.conf.get("spark.sql.shuffle.partitions").toInt)))
-      // Advance only after a fully successful write — reference semantics
-      // (`CommCareAPIHandler.py:261-262`): failures re-extract the window,
-      // and a custom-range backfill NEVER advances (`not custom_range`
-      // guards _save_run_time in the reference).
-      if (customRange.isEmpty)
-        state.put(stateKey, java.sql.Timestamp.from(upperInstant).toInstant.toString
-          .replace("Z", "").replace("T", " "))
-      n
+      landWindow(parsed, bronzeDir, state, stateKey, upper, customRange)("rows")
+        .asInstanceOf[Long]
     } finally parsed.unpersist()
   }
 }

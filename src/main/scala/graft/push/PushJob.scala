@@ -17,8 +17,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
   * as the reference's API).
   */
 object PushJob {
-  final case class PushStats(sent: Long, failed: Long)
-
   class ApiError(msg: String) extends RuntimeException(msg)
 
   // One client per executor JVM (object init) — pooled connections across

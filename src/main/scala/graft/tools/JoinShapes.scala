@@ -17,12 +17,8 @@ import scala.util.control.NonFatal
 object JoinShapes {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val builder = graft.GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1"))
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    val spark = builder.getOrCreate()
+    val spark = graft.GraftSession.builder(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val only: Set[String] = args.toSet

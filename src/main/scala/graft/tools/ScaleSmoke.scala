@@ -252,12 +252,10 @@ object ScaleSmoke {
         // bronze, median of 3 (the Bench ingest slice's shape)
         val evs = graft.core.Tables.events(spark, out)
         val n = evs.count()
-        val width = graft.core.ApiLimitCalculator.writeWidth(n, 32)
         val reps = (0 until 3).map { i =>
           val dst = s"$out/bronze_smoke$i"
           val t0 = System.nanoTime()
-          graft.ingest.Ingest.writeBronze(evs, dst, tsCol = "ts",
-            granularity = "day", writeTasks = Some(width))
+          graft.ingest.Ingest.writeBronze(evs, dst, tsCol = "ts", granularity = "day")
           val dt = (System.nanoTime() - t0) / 1e9
           try {
             import scala.jdk.CollectionConverters._
@@ -272,16 +270,14 @@ object ScaleSmoke {
       case name =>
       (0 until 2).foreach { i =>
         heapPools.foreach(_.resetPeakUsage())
-        val t0 = System.nanoTime()
-        val n = graft.SparkEntry.queries(name)(spark, out).count()
+        // the gated bench pass (noop sink, then cache release and GC)
+        val dt = graft.Bench.noopPass(spark, graft.SparkEntry.queries(name), out).get
         // per-pool peaks summed: peaks need not be simultaneous, so this
         // is an upper bound — the machine-readable ceiling the r14 verdict
         // asked for next to the configured xmx (watch item 2)
         val peak = heapPools.map(_.getPeakUsage.getUsed).sum
-        println(f"[scale$copies] $name rep$i: ${(System.nanoTime() - t0) / 1e9}%.1fs rows=$n " +
+        println(f"[scale$copies] $name rep$i: $dt%.1fs " +
           f"peak_heap=${peak / 1073741824.0}%.1fg/${xmxBytes / 1073741824.0}%.1fg")
-        graft.GraftSession.releaseCaches(spark)
-        System.gc()
         // settle (the Bench r10 lesson): System.gc() QUEUES ContextCleaner
         // work (shuffle-file removal) that otherwise executes ASYNC inside
         // the NEXT timed rep — observed here as rep1 > rep0 inversions at

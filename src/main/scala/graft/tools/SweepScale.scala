@@ -9,8 +9,8 @@ import scala.util.control.NonFatal
   * so a 1× run and a 32× run diff into a per-lane scale-exponent table
   * (time(32×)/time(1×)) for PLANS.md.
   *
-  * Timing = noop-sink materialization (the round-10 gated bench metric);
-  * rep0 pays codegen, rep1 is the reported warm number. A per-lane
+  * Timing = [[graft.Bench.noopPass]], the gated bench pass; rep0 pays
+  * codegen, rep1 is the reported warm number. A per-lane
   * watchdog cancels the lane's job group after SPARK_GRAFT_SWEEP_TIMEOUT
   * seconds (default 240) and records status=timeout — the documented-O(n²)
   * audit baselines are EXPECTED to trip it at 32×; that is the finding,
@@ -62,28 +62,23 @@ object SweepScale {
         new java.util.concurrent.atomic.AtomicReferenceArray[Either[String, Double]](2)
       lazy val runner: Thread = new Thread(() => {
         spark.sparkContext.setJobGroup(s"sweep-$name", name, interruptOnCancel = true)
-        def onePass(): Either[String, Double] = {
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, out).write.format("noop").mode("overwrite").save()
-            Right((System.nanoTime() - t0) / 1e9)
+        def onePass(): Either[String, Double] =
+          try graft.Bench.noopPass(spark, fn, out).toEither.left.map { e =>
+            // Root-cause message inline (r11: q93's 128× failure printed
+            // only `error:SparkException` — useless for diagnosis);
+            // newlines stripped so the line stays grep-parseable.
+            def msg(t: Throwable): String = {
+              val root = Iterator.iterate(t)(_.getCause)
+                .takeWhile(_ != null).toSeq.last
+              Option(root.getMessage).getOrElse("")
+                .replaceAll("[\\r\\n\\t]+", " ").take(300)
+            }
+            if (cancelled.get()) "timeout"
+            else s"error:${e.getClass.getSimpleName}(${msg(e)})"
           } catch {
             // the watchdog's last escalation interrupts this runner thread
             case _: InterruptedException => Left("timeout")
-            case NonFatal(e) =>
-              // Root-cause message inline (r11: q93's 128× failure printed
-              // only `error:SparkException` — useless for diagnosis);
-              // newlines stripped so the line stays grep-parseable.
-              def msg(t: Throwable): String = {
-                val root = Iterator.iterate(t)(_.getCause)
-                  .takeWhile(_ != null).toSeq.last
-                Option(root.getMessage).getOrElse("")
-                  .replaceAll("[\\r\\n\\t]+", " ").take(300)
-              }
-              Left(if (cancelled.get()) "timeout"
-                   else s"error:${e.getClass.getSimpleName}(${msg(e)})")
           }
-        }
         val r0 = onePass()
         results.set(0, r0)
         val r1 = if (r0.isRight && !cancelled.get()) onePass() else r0

@@ -109,12 +109,13 @@ class CollectAuditSpec extends AnyFunSuite {
 
   test("the .head() census matches the adjudicated floor exactly") {
     // every site is a SINGLE-ROW aggregate pull (the scalar-broadcast
-    // idiom): Ingest — avg payload width probe + max watermark ts; Hits —
+    // idiom): Ingest — max watermark ts (the payload width is observed in
+    // the landing write, no pull); Hits —
     // the edge-count/weight stats row gating the fused strategy;
     // Similarity — the 1-row global centroid; Relational3 — the 1-row
     // profile stats row
     gate(".head()", census("\\.head\\(\\)"), Map(
-      "ingest/Ingest.scala" -> 2,
+      "ingest/Ingest.scala" -> 1,
       "core/Hits.scala" -> 1,
       "queries/Similarity.scala" -> 1,
       "queries/Relational3.scala" -> 1

@@ -152,7 +152,7 @@ class IngestSpec extends SparkSpec {
       val df = (0 until 200).map { i =>
         (run * 1000L + i, java.sql.Timestamp.valueOf(f"2024-01-01 ${i % 2}%02d:00:00"), s"v$run-$i")
       }.toDF("event_id", "ts", "payload")
-      Ingest.writeBronze(df, bronze, tsCol = "ts", writeTasks = Some(2))
+      Ingest.writeBronze(df, bronze, tsCol = "ts")
     }
     def partFiles: Seq[java.nio.file.Path] = {
       import scala.jdk.CollectionConverters._

@@ -20,10 +20,11 @@ class RestPullE2ESpec extends SparkSpec {
   private def tsMicros(i: Int): Long =
     graft.sources.RestEnvelopeSource.parseTsMicros(tsStr(i))
 
-  private def serve(f: String => Unit): Unit = {
+  private def serve(requests: AtomicInteger = new AtomicInteger(0))(f: String => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress(0), 0)
     server.createContext("/api", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
+        requests.incrementAndGet()
         val q = Option(ex.getRequestURI.getQuery).getOrElse("")
         val params = q.split("&").filter(_.contains("=")).map { kv =>
           val Array(k, v) = kv.split("=", 2); k -> java.net.URLDecoder.decode(v, "UTF-8")
@@ -175,7 +176,7 @@ class RestPullE2ESpec extends SparkSpec {
   }
 
   test("REST → bronze → watermark → incremental re-pull (R1-R8 chain)") {
-    serve { url =>
+    serve() { url =>
       val bronze = java.nio.file.Files.createTempDirectory("rb").toString + "/b"
       val state = new StateStore(java.nio.file.Files.createTempDirectory("rs").toString)
 
@@ -197,6 +198,97 @@ class RestPullE2ESpec extends SparkSpec {
       assert(all.select(org.apache.spark.sql.functions.sum(
         org.apache.spark.sql.functions.get_json_object($"payload", "$.x").cast("long")))
         .as[Long].head === (0 until N).sum)
+    }
+  }
+
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) Nil
+    else {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSeq
+      finally walk.close()
+    }
+  }
+
+  test("one landing pass: a pull runs 3 Spark jobs, caches nothing, pages the API once") {
+    val requests = new AtomicInteger(0)
+    serve(requests) { url =>
+      val root = java.nio.file.Files.createTempDirectory("rone").toString
+      val state = new StateStore(s"$root/s")
+      val jobs = new AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      GraftSession.releaseCaches(spark)
+      GraftSession.drainListenerBus(spark)
+      spark.sparkContext.addSparkListener(listener)
+      val n =
+        try {
+          val landed = Ingest.restPullRun(spark, url, s"$root/b", state,
+            java.time.Instant.parse("2024-06-01T19:00:00Z"), limit = 7, slices = 3)
+          GraftSession.drainListenerBus(spark)
+          landed
+        } finally spark.sparkContext.removeSparkListener(listener)
+      assert(n === 20)
+      // the dedup shuffle, the write's shuffle and the write itself; the
+      // cached window with its separate count pass took 6 here
+      assert(jobs.get() === 3)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+      // the same 4 pages the cached single scan fetched: the window is
+      // still read from the API exactly once
+      assert(requests.get() === 4)
+    }
+  }
+
+  test("an empty window lands no parquet file and still advances the watermark") {
+    serve() { url =>
+      val root = java.nio.file.Files.createTempDirectory("rempty").toString
+      val state = new StateStore(s"$root/s")
+      state.put("last_successful_job_time", "2024-06-02 05:00:00") // the last fixture row
+      val n = Ingest.restPullRun(spark, url, s"$root/b", state,
+        java.time.Instant.parse("2024-06-02T06:00:00Z"), limit = 7, slices = 3)
+      assert(n === 0)
+      assert(parquetFiles(s"$root/b").isEmpty)
+      assert(state.get("last_successful_job_time").get === "2024-06-02 06:00:00")
+    }
+  }
+
+  /** Runs `body` with the JVM default zone off UTC, as on a host whose
+    * driver was started without `-Duser.timezone=UTC`. */
+  private def inNewYork(body: => Unit): Unit = {
+    val saved = java.util.TimeZone.getDefault
+    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/New_York"))
+    try body
+    finally java.util.TimeZone.setDefault(saved)
+  }
+
+  test("off a UTC JVM zone, the resume starts right after the stored watermark") {
+    inNewYork {
+      serve() { url =>
+        val bronze = java.nio.file.Files.createTempDirectory("rtz").toString + "/b"
+        val state = new StateStore(java.nio.file.Files.createTempDirectory("rtzs").toString)
+        val n1 = Ingest.restPullRun(spark, url, bronze, state,
+          java.time.Instant.parse("2024-06-01T19:00:00Z"), limit = 7, slices = 3)
+        assert(n1 === 20)
+        assert(state.get("last_successful_job_time").get === "2024-06-01 19:00:00")
+        // read in the JVM zone, the watermark would be 23:00Z and hours
+        // 20..23 would never land
+        val n2 = Ingest.restPullRun(spark, url, bronze, state,
+          java.time.Instant.parse("2024-06-02T06:00:00Z"), limit = 7, slices = 3)
+        assert(n2 === 10)
+        assert(Ingest.readBronzeDeduped(spark, bronze, "id").select($"id").as[Long]
+          .collect().sorted.toSeq === (0L until 30L))
+      }
+    }
+  }
+
+  test("off a UTC JVM zone, nanosOf still reads its literal as UTC") {
+    inNewYork {
+      assert(graft.core.Tables.nanosOf("2024-01-10 00:00:00") ===
+        java.time.Instant.parse("2024-01-10T00:00:00Z").getEpochSecond * 1000000000L)
     }
   }
 }
