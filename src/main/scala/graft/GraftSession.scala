@@ -4,12 +4,12 @@ import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** ONE definition of the session configuration every graft entry point
-  * shares — Verify, Bench, Explain, the tool mains and the CLI previously each
+  * shares — Verify, Bench, the tool mains and the CLI previously each
   * repeated the same five conf lines, and a conf dropped from one of them
   * (e.g. `nanosAsLong`, required before any `events.parquet` scan) is the
   * kind of drift a round-2 review actually had to chase. Extras that are
-  * genuinely per-main (bench's concurrent writers, Explain's
-  * no-broadcast preview) layer on top of the returned builder.
+  * genuinely per-main (bench's concurrent writers) layer on top of the
+  * returned builder.
   *
   * Conf notes:
   *  - `shuffle.partitions` = core count, not the 200 default — at test SF
@@ -68,9 +68,9 @@ object GraftSession {
     // SPARK_GRAFT_NO_BROADCAST=1: the at-scale join-shape preview — with
     // test-SF inputs every join side fits under the broadcast threshold,
     // which hides the SMJ/shuffle structure a 100 TB run would use.
-    // Honored by EVERY entry point (Bench, Verify, NoopTime, Explain,
-    // JoinShapes) so the full lane set can be run and benched in the
-    // degraded-shape configuration (r9 audit). Explicit broadcast() hints
+    // Honored by EVERY entry point (Bench, Verify, NoopTime, PlanDump) so
+    // the full lane set can be run and benched in the degraded-shape
+    // configuration (r9 audit). Explicit broadcast() hints
     // are unaffected by design — they mark sides bounded by construction.
     if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1"))
       b.config("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -130,15 +130,16 @@ object GraftSession {
     * consumer (CacheHygieneSpec pins storage-to-zero and re-run safety).
     */
   def releaseCaches(spark: SparkSession): Int = {
-    // Snapshot FIRST: clearCache() drops the CacheManager's DataFrame
-    // entries (and their backing RDDs leave the persistent registry), so
-    // counting afterwards reports 0 — but its block removal is async; the
-    // explicit blocking unpersist over the snapshot is what guarantees
-    // the BlockManager has dropped every block before returning
-    // (unpersist on an already-cleared RDD is an idempotent no-op).
+    // Blocking unpersist FIRST, clearCache() after: clearCache() removes
+    // the CacheManager's blocks asynchronously, and a blocking unpersist
+    // of the same RDD while that removal runs can collide with it on one
+    // block and fail with "Block rdd_N_M does not exist" (seen as an
+    // intermittent perfbench JVM failure; CacheHygieneSpec reproduces it).
+    // Once every block is gone, clearCache() only drops the DataFrame
+    // entries and its async removal finds nothing to remove.
     val cached = spark.sparkContext.getPersistentRDDs.values.toSeq
-    spark.catalog.clearCache()
     cached.foreach(_.unpersist(blocking = true))
+    spark.catalog.clearCache()
     cached.size
   }
 

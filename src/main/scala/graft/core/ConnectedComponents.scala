@@ -57,10 +57,9 @@ object ConnectedComponents {
     * materialized batch. On dedup workloads the pair graph is post-filter
     * tiny relative to the corpus (sf0.1: ~2 k edges from 5 k docs), so this
     * is the common case at every scale; a graph that outgrows the threshold
-    * takes the superstep path unchanged. Env override `GRAFT_CC_LOCAL_MAX`
-    * (dev/ops knob): `-1` forces the superstep path (scale rehearsal). */
-  val LocalSolveMaxEdges: Long =
-    sys.env.get("GRAFT_CC_LOCAL_MAX").map(_.toLong).getOrElse(4_000_000L)
+    * takes the superstep path unchanged. A caller forces the superstep path
+    * by passing `localSolveMaxEdges = -1` to [[labels]]. */
+  val LocalSolveMaxEdges: Long = 4_000_000L
 
   /** Single-task exact solve: union-find with full path compression and
     * union-by-min (the smaller root always becomes parent), so every root is
@@ -217,9 +216,6 @@ object ConnectedComponents {
         prevCache = step
         inFlight = null
         iters += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(
-            s"[cc] superstep batch $iters: hook1=${acc1.value} hook2=${acc2.value}")
 
         // CONTRACTION EXIT — what makes the distributed path terminate in
         // O(1) batches on real dedup graphs instead of O(log diameter):
@@ -269,9 +265,6 @@ object ConnectedComponents {
             inFlight = null
             secondHook = 0
             solvedExactly = true
-            if (sys.env.contains("GRAFT_CC_DEBUG"))
-              System.err.println(
-                s"[cc] contraction exit after batch $iters: residual=$residual")
           } else {
             relabeled.unpersist(blocking = false)
             inFlight = null

@@ -57,9 +57,10 @@ object Triangles {
     // the edge list (JobProbe r16: two 22-task stages writing the same
     // 4.3 MB agg per pass). One row per node, 2 longs: bounded at any SF;
     // every consumer is now a re-read of the checkpoint.
-    val deg = Barrier.bounded(edges.select(col("a").as("node"))
+    val deg = edges.select(col("a").as("node"))
       .unionAll(edges.select(col("b").as("node")))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg")))
+      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
+      .localCheckpoint(true)
 
     // Total order low→high: lexicographic (degree, id). Unique by id.
     // A plain projection of the checkpointed deg — both orientation joins

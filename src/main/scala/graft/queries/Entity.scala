@@ -398,16 +398,20 @@ object Entity {
     * their complete raw payload) dedup via `array_distinct` before the
     * expansion, and the rare hot side dedups its emitted pairs per basket —
     * so common-path callers skip the extra (basket, item) distinct shuffle
-    * the old collect_set absorbed. */
+    * the old collect_set absorbed.
+    *
+    * `hotKeyGateBytes` is splitHotBuckets' count-path size gate; every lane
+    * takes the default, and a spec passes 0 to force the protected path. */
   private[graft] def basketPairs(raw: DataFrame, basket: String, item: String,
-      cap: Int = BasketCap): DataFrame = {
+      cap: Int = BasketCap,
+      hotKeyGateBytes: Long = Similarity.HotKeyCountGateBytes): DataFrame = {
     // BARE long payload (not struct(doc_id)): the struct wrapper costs an
     // UnsafeRow object per collected element in the capped buffers — 2-3×
     // a boxed long's heap across the corpus's items, the margin between
     // passing and heap-OOM at the 128× rehearsal
     val rows = raw.select(col(basket).as("__bk"),
       col(item).cast("long").as("e"))
-    // hotKeysByCount, not exchange reuse or caches: for basket callers the
+    // The count gate, not exchange reuse or caches: for basket callers the
     // capped collect over millions of baskets IS the dominant stage, and
     // running its final aggregation twice (cold + hot-key branches)
     // measured ~2× the lane at 32× with an execution-memory OOM at 128×;
@@ -420,7 +424,7 @@ object Entity {
     // only the count agg plus the rare hot branch re-read it (3 scans of a
     // projected frame at worst, 2 in the common plan — ScanAudit-checked).
     val (cold, hot) = Similarity.splitHotBuckets(rows, Seq("__bk"), cap,
-      persistInput = false, hotKeysByCount = true)
+      persistInput = false, hotKeyCountGate = Some(hotKeyGateBytes))
     val coldPairs = cold
       .select(col("__bk").as("bk"),
         explode(expr("pair_expand_ids(array_distinct(ds))")).as("p"))
@@ -513,18 +517,18 @@ object Entity {
     // survives only inside nOrd's linear chain. nOrd itself (one row per
     // part) is the frame both sim joins consume, so IT carries the
     // barrier: strictly smaller than the old opB, same recompute guard.
-    val nOrd = graft.core.Barrier.bounded(
-      Tables.lineitem(spark, dir)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-        .groupBy(col("pk")).agg(count(lit(1)).as("cnt")))
+    val nOrd = Tables.lineitem(spark, dir)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct()
+      .groupBy(col("pk")).agg(count(lit(1)).as("cnt"))
+      .localCheckpoint(true)
     val pairs0 = basketPairs(
         Tables.lineitem(spark, dir)
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")),
         basket = "ok", item = "pk")
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("w"))
-    val pairs = graft.core.Barrier.bounded(pairs0)
+    val pairs = pairs0.localCheckpoint(true)
     val sym = pairs.unionAll(
       pairs.select(col("b").as("a"), col("a").as("b"), col("w")))
     val sim = sym
@@ -707,13 +711,13 @@ object Entity {
     val raw = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val nBaskets = raw.agg(countDistinct(col("ok")).as("nn")) // 1-row broadcast
-    val item = graft.core.Barrier.bounded(
-      raw.distinct().groupBy(col("pk")).agg(count(lit(1)).as("n_item")))
+    val item = raw.distinct().groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
+      .localCheckpoint(true)
     val pairs1 = basketPairs(raw, basket = "ok", item = "pk")
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("w"))
       .filter(col("w") >= 3L)
-    val pairs = graft.core.Barrier.bounded(pairs1)
+    val pairs = pairs1.localCheckpoint(true)
     val directional = pairs.select(col("a"), col("b"), col("w"))
       .unionAll(pairs.select(col("b").as("a"), col("a").as("b"), col("w")))
     directional

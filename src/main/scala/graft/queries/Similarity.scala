@@ -82,16 +82,14 @@ object Similarity {
     * identical viral-key failure mode. */
   private[graft] val HotBucketCap = 256
 
-  /** Input-size gate for the `hotKeysByCount` protected path of
-    * [[splitHotBuckets]]: inputs whose Catalyst size estimate is below this
-    * derive hot keys from the capped-collect aggregation itself (one
-    * shuffle, no extra job); at or above it they pay the separate count
-    * pass + barrier that bought the 32×/128× memory robustness (PLANS
-    * Round-14/15). Overridable via -Dgraft.hotkey.gate.bytes for the gate
-    * spec and A/B tooling ONLY — the production mains die on a leaked
-    * override (Barrier.assertNoOverride). */
-  private[graft] def HotKeyCountGateBytes: Long =
-    sys.props.get("graft.hotkey.gate.bytes").map(_.toLong).getOrElse(16L << 20)
+  /** Input-size gate for the protected hot-key path of [[splitHotBuckets]]
+    * (the `hotKeyCountGate` the basket callers pass): inputs whose Catalyst
+    * size estimate is below this derive hot keys from the capped-collect
+    * aggregation itself (one shuffle, no extra job); at or above it they
+    * pay the separate count pass + barrier that bought the 32×/128× memory
+    * robustness (PLANS Round-14/15). A caller that needs the other side
+    * (a spec forcing the protected path) passes its own threshold. */
+  private[graft] val HotKeyCountGateBytes: Long = 16L << 20
 
   /** Single-pass hot-bucket routing shared by the posting/bucket pair lanes
     * (q24_jaccard, q24_lsh, q24_simhash, q26_span_dup), built on the
@@ -135,7 +133,7 @@ object Similarity {
     * payload pairs, each unordered pair exactly once via the payload id
     * order (x.doc_id < y.doc_id for structs, x < y bare).
     *
-    * `hotKeysByCount` (r14, the basket-caller profile): deriving the
+    * `hotKeyCountGate` (r14, the basket-caller profile): deriving the
     * hot-key frame from `grouped` shares the SHUFFLE between the cold
     * branch and the hot-key probe (partial buffers cross the wire once),
     * but the final ObjectHashAggregate still EXECUTES twice over it — free
@@ -146,21 +144,22 @@ object Similarity {
     * 77.7, plus an execution-memory OOM at 128× from the two concurrent
     * object-agg passes; caching `grouped` instead still read 113 s — the
     * columnar encode of millions of array rows is its own tax). With
-    * hotKeysByCount the hot keys come from a SEPARATE plain count
+    * the count gate engaged the hot keys come from a SEPARATE plain count
     * aggregation over `rows` — codegen HashAggregate, map-side-combined
     * longs, a shuffle of ~one row per (key, map task) — and `grouped` has
     * exactly ONE consumer (the cold branch): no cache, no second object
     * agg. The extra `rows` pass is a cheap re-read for every basket caller
     * (a 2-column scan or an existing checkpoint). Not default: the band
     * lanes' rows derivation is the expensive part there, and their
-    * grouped agg is small. The flag is an UPPER-BOUND declaration, not an
-    * unconditional switch: below [[HotKeyCountGateBytes]] of estimated
-    * input the protection costs more than it protects, so the gate at the
-    * `hk` branch point falls back to the grouped derivation (r15; see the
-    * size-gate comment there for the measured calibration). */
+    * grouped agg is small. `Some(bytes)` is an UPPER-BOUND declaration,
+    * not an unconditional switch: below `bytes` of estimated input (the
+    * basket callers pass [[HotKeyCountGateBytes]]) the protection costs
+    * more than it protects, so the gate at the `hk` branch point falls back
+    * to the grouped derivation (r15; see the size-gate comment there for
+    * the measured calibration). `None` never takes the count path. */
   private[graft] def splitHotBuckets(rows: DataFrame, keyCols: Seq[String],
                               cap: Int, persistInput: Boolean = true,
-                              hotKeysByCount: Boolean = false): (DataFrame, DataFrame) = {
+                              hotKeyCountGate: Option[Long] = None): (DataFrame, DataFrame) = {
     val keys = keyCols.map(col)
     // Lazy cache: `rows` feeds the aggregation AND (when hot keys exist)
     // the semi probe + both salted-join sides — without it the hot branch
@@ -191,7 +190,7 @@ object Similarity {
     // Inner broadcast ≡ the former left_semi here (hk keys are distinct,
     // so no row duplication), and AQE's empty-relation propagation still
     // collapses the hot branch when hk materializes empty.
-    // hotKeysByCount: the hot-key frame is BARRIERED (eager, tiny — bounded
+    // Count path: the hot-key frame is BARRIERED (eager, tiny — bounded
     // by the broadcast argument above, empty on benign corpora), which
     // SERIALIZES the count pass against the capped-collect stage. Left as
     // two lazy stages of one job, the DAG scheduler runs both map sides
@@ -212,7 +211,7 @@ object Similarity {
     // by plan-only consumers at DataFrame construction) protecting an
     // aggregation whose partials fit in one task slot's lap. So the count
     // pass engages only when Catalyst's optimized-plan size estimate for
-    // `rows` reaches HotKeyCountGateBytes; below it, hot keys derive from
+    // `rows` reaches the gate; below it, hot keys derive from
     // `grouped` — one shuffle, exchange reused between the cold branch and
     // the probe, no extra job (the r13 shape, measured fastest at 1×).
     // Measured estimates (PLANS.md Round 15 Task 3, 2-col basket projection):
@@ -222,17 +221,18 @@ object Similarity {
     // (32×, PLANS Round-14), and an estimate-less input (LogicalRDD
     // defaults to spark.sql.defaultSizeInBytes = Long.MaxValue) lands on
     // the PROTECTED side — unknown size is treated as large.
-    val bigInput = hotKeysByCount && {
+    val bigInput = hotKeyCountGate.exists { gate =>
       val est = scala.util.Try(
         rows.queryExecution.optimizedPlan.stats.sizeInBytes)
         .getOrElse(BigInt(Long.MaxValue))
-      est >= HotKeyCountGateBytes
+      est >= gate
     }
     val hk =
-      if (bigInput) graft.core.Barrier.bounded(
+      if (bigInput)
         src.groupBy(keys: _*).agg(count(lit(1)).as("__hk_f"))
           .filter(col("__hk_f") > cap)
-          .select(col("__hk_f") +: keyCols.map(c => col(c).as(s"__hk_$c")): _*))
+          .select(col("__hk_f") +: keyCols.map(c => col(c).as(s"__hk_$c")): _*)
+          .localCheckpoint(true)
       else grouped.filter(col("g.f") > cap)
         .select(col("g.f").as("__hk_f") +: keyCols.map(c => col(c).as(s"__hk_$c")): _*)
     val nsCond = keyCols.map(c => col(c) <=> col(s"__hk_$c")).reduce(_ && _)

@@ -9,8 +9,6 @@ object NoopTime {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warms = sys.env.getOrElse("SPARK_GRAFT_WARM_PASSES", "2").toInt
-    sys.env.get("SPARK_GRAFT_HOTKEY_GATE")
-      .foreach(v => sys.props("graft.hotkey.gate.bytes") = v)
     val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     require(args.nonEmpty, "pass lane names")

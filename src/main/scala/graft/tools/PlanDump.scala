@@ -1,31 +1,48 @@
 package graft.tools
 
-/** Dev-only plan dumper: print the FINAL adaptive executed plan of named
-  * SparkEntry lanes (collect() first — under AQE, executedPlan is not
-  * finalized by mere resolution; the JoinShapes lesson), with operator
-  * lines only (joins/exchanges/scans/aggregates) unless SPARK_GRAFT_FULL=1.
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.PlanDump q24_jaccard_sample
+import scala.util.control.NonFatal
+
+/** Dev-only plan dumper: for each named SparkEntry lane (every lane, sorted
+  * by name, when none is named) run `collect()` — under AQE the executed
+  * plan is final only after an action — then print the final adaptive plan
+  * with `explain("formatted")` and one parse-friendly join-shape line:
+  *   [joinshapes] <lane> BHJ=n SMJ=n SHJ=n BNLJ=n CART=n ok=true|false
+  * Run once normally and once with SPARK_GRAFT_NO_BROADCAST=1 (broadcast
+  * thresholds off, the at-scale preview where no "small" side fits) and
+  * diff the `[joinshapes]` lines. Explicit one-row broadcast() crosses
+  * legitimately stay BroadcastNestedLoopJoin under the flag (hints ignore
+  * the threshold); the question is which lanes' AUTO broadcasts degrade,
+  * and to what.
+  * Usage: SPARK_GRAFT_SF_DIR=… runMain graft.tools.PlanDump [lane…]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val full = sys.env.get("SPARK_GRAFT_FULL").contains("1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val lanes =
+      if (args.isEmpty) graft.SparkEntry.queries.toSeq.sortBy(_._1)
+      else args.toSeq.map(n => n -> graft.SparkEntry.queries.getOrElse(n,
+        sys.error(s"unknown lane $n")))
     val spark = graft.GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
-    require(args.nonEmpty, "pass lane names")
-    args.foreach { name =>
-      val fn = graft.SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown lane $name"))
-      val df = fn(spark, sfDir)
-      df.collect()
-      val plan = df.queryExecution.executedPlan.toString
+    lanes.foreach { case (name, fn) =>
       println(s"=== $name ===")
-      if (full) println(plan)
-      else plan.split("\n").filter(l =>
-        l.contains("Join") || l.contains("Exchange") || l.contains("Scan") ||
-          l.contains("Aggregate") || l.contains("Window") || l.contains("Sort") ||
-          l.contains("InMemory")).foreach(println)
-      graft.GraftSession.releaseCaches(spark)
+      val line =
+        try {
+          val df = fn(spark, sfDir)
+          df.collect() // finalize the adaptive plan
+          df.explain("formatted")
+          val plan = df.queryExecution.executedPlan.toString
+          def n(op: String) = op.r.findAllMatchIn(plan).size
+          s"$name BHJ=${n("BroadcastHashJoin")} SMJ=${n("SortMergeJoin")} " +
+            s"SHJ=${n("ShuffledHashJoin")} BNLJ=${n("BroadcastNestedLoopJoin")} " +
+            s"CART=${n("CartesianProduct")} ok=true"
+        } catch {
+          case NonFatal(e) =>
+            s"$name FAILED: ${String.valueOf(e.getMessage).take(120)} ok=false"
+        }
+      println(s"[joinshapes] $line")
+      try graft.GraftSession.releaseCaches(spark)
+      catch { case NonFatal(_) => () }
     }
     spark.stop()
   }

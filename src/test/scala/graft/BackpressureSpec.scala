@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.Trigger
 class BackpressureSpec extends SparkSpec {
 
   test("bounded triggers drain a file backlog in steady batches with a monotone watermark") {
-    val src = java.nio.file.Files.createTempDirectory("graft_bp_src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_bp_ckpt").toString
+    val src = tempDir("graft_bp_src").toString
+    val ckpt = tempDir("graft_bp_ckpt").toString
     // backlog: the sf0.001 events split into 12 files
     val ev = graft.core.Tables.events(spark, sf001)
     ev.repartition(12).write.mode("overwrite").parquet(src)

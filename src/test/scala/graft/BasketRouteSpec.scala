@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.Entity
+import graft.queries.{Entity, Similarity}
 
 /** Entity.basketPairs — the viral-basket routing gate (r13 VERDICT task 1).
   *
@@ -109,15 +109,14 @@ class BasketRouteSpec extends SparkSpec {
     // estimate. Observable: the barrier is localCheckpoint(eager) — the
     // hot-key subtree becomes a LogicalRDD in the analyzed plan. A tiny
     // LocalRelation input must NOT carry one (grouped derivation, no extra
-    // job); with the gate threshold forced to 0 the same input MUST.
+    // job); with the gate threshold passed as 0 the same input MUST.
     val in = Seq((1L, 2L), (1L, 3L)).toDF("bk", "it")
-    def planOf = Entity.basketPairs(in, "bk", "it").queryExecution.analyzed.toString
-    assert(!planOf.contains("LogicalRDD"),
+    def planOf(gate: Long) = Entity.basketPairs(in, "bk", "it",
+      hotKeyGateBytes = gate).queryExecution.analyzed.toString
+    assert(!planOf(Similarity.HotKeyCountGateBytes).contains("LogicalRDD"),
       "small input paid the count barrier — the size gate regressed to unconditional")
-    sys.props("graft.hotkey.gate.bytes") = "0"
-    try assert(planOf.contains("LogicalRDD"),
+    assert(planOf(0L).contains("LogicalRDD"),
       "forced-large input skipped the count barrier — the protected path is gone")
-    finally sys.props.remove("graft.hotkey.gate.bytes")
   }
 
   test("routed pairs == brute force through the FORCED protected path (r15)") {
@@ -126,13 +125,10 @@ class BasketRouteSpec extends SparkSpec {
     // coverage — force it and re-prove the cap-boundary equality
     val rows = Seq((1L, 10L), (1L, 11L), (1L, 12L), (1L, 10L),
       (2L, 20L), (2L, 21L), (3L, 30L), (4L, 40L), (4L, 40L), (4L, 40L))
-    sys.props("graft.hotkey.gate.bytes") = "0"
-    try {
-      val got = Entity.basketPairs(rows.toDF("bk", "it"), "bk", "it", cap = 2)
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(got.size === got.distinct.size, "a pair was emitted twice")
-      assert(got.sorted === expectedPairs(rows).sorted)
-    } finally sys.props.remove("graft.hotkey.gate.bytes")
+    val got = Entity.basketPairs(rows.toDF("bk", "it"), "bk", "it", cap = 2,
+      hotKeyGateBytes = 0L).as[(Long, Long, Long)].collect().toSeq
+    assert(got.size === got.distinct.size, "a pair was emitted twice")
+    assert(got.sorted === expectedPairs(rows).sorted)
   }
 
   test("source census: all seven basket lanes ride basketPairs; collect_set banned") {

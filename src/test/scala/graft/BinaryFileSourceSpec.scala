@@ -19,7 +19,7 @@ class BinaryFileSourceSpec extends SparkSpec {
   import spark.implicits._
 
   test("binaryFile scan feeds the shared PNG decode path; glob + corrupt quarantine hold") {
-    val dir = Files.createTempDirectory("graft_binfile").toString
+    val dir = tempDir("graft_binfile").toString
     val ids = Seq(1L, 2L, 3L, 4L)
     ids.foreach { id =>
       Files.write(Paths.get(s"$dir/img_$id.png"), Multimodal.encodePng(id))

@@ -52,6 +52,19 @@ class CacheHygieneSpec extends SparkSpec {
     assert(spark.sparkContext.getRDDStorageInfo.isEmpty)
   }
 
+  test("releaseCaches drains a many-block cached frame without racing its own cache clear") {
+    // Two removals of one RDD running at once (an async clearCache and a
+    // blocking unpersist) can collide on a block inside the BlockManager
+    // and fail with "Block rdd_N_M does not exist". Many blocks per RDD,
+    // released many times, make that collision likely if it can happen.
+    (1 to 50).foreach { _ =>
+      val df = spark.range(0, 20000, 1, 64).selectExpr("id", "id * 2 AS twice").persist()
+      assert(df.count() == 20000)
+      assert(GraftSession.releaseCaches(spark) >= 1)
+      assert(spark.sparkContext.getRDDStorageInfo.isEmpty)
+    }
+  }
+
   test("releaseCaches on an idle session is a safe no-op") {
     GraftSession.releaseCaches(spark)
     val n = GraftSession.releaseCaches(spark)

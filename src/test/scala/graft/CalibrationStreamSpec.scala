@@ -28,8 +28,8 @@ class CalibrationStreamSpec extends SparkSpec {
 
   test("streamed bins land on the batch reduction at every version; replay idempotent") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cal").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cal_ck").toString
+    val dir = tempDir("graft_cal").toString
+    val ckpt = tempDir("graft_cal_ck").toString
     val src = MemoryStream[ScoreRow]
     val q = StreamingJobs.calibrationMaintain(src.toDF(), dir)
       .option("checkpointLocation", ckpt).start()

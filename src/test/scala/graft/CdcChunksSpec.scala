@@ -18,7 +18,7 @@ import graft.queries.TextOps
 class CdcChunksSpec extends SparkSpec {
 
   private def cdcOf(docs: DataFrame): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val dir = tempDir("graft_cdc").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     TextOps.q23CdcChunks(spark, dir)
   }
@@ -101,7 +101,7 @@ class CdcChunksSpec extends SparkSpec {
     // the fixed-stride contrast on one long doc: a 3-token prefix shifts
     // every 40-token stride, so at most the final ragged chunk can agree
     val longest = base.maxBy(_._2.length)
-    val strideDir = java.nio.file.Files.createTempDirectory("graft_stride").toString
+    val strideDir = tempDir("graft_stride").toString
     docsDF(Seq(longest, (longest._1 + 100000L, s"inserted preamble tokens ${longest._2}")))
       .write.mode("overwrite").parquet(s"$strideDir/documents.parquet")
     val stride = TextOps.q23Chunks(spark, strideDir)

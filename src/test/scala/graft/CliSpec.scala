@@ -44,7 +44,7 @@ class CliSpec extends SparkSpec {
     import java.net.InetSocketAddress
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
     // landing dirs: one JSON doc per specifier
-    val landing = java.nio.file.Files.createTempDirectory("cli_push").toString
+    val landing = tempDir("cli_push").toString
     Seq("alpha", "beta").foreach { s =>
       val d = java.nio.file.Paths.get(landing, s)
       java.nio.file.Files.createDirectories(d)
@@ -80,7 +80,7 @@ class CliSpec extends SparkSpec {
     "same as runPushAll would (lambda_function.py:69-81)") {
     import java.net.InetSocketAddress
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    val landing = java.nio.file.Files.createTempDirectory("cli_named").toString
+    val landing = tempDir("cli_named").toString
     val d = java.nio.file.Paths.get(landing, "alpha")
     java.nio.file.Files.createDirectories(d)
     java.nio.file.Files.write(d.resolve("doc.json"),
@@ -111,7 +111,7 @@ class CliSpec extends SparkSpec {
     "({specifier}/YYYY/MM/DD/HH/, CommCareAPIHandler.py:275-277)") {
     import java.net.InetSocketAddress
     import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-    val landing = java.nio.file.Files.createTempDirectory("cli_nested").toString
+    val landing = tempDir("cli_nested").toString
     val hours = Seq("2024/03/01/22", "2024/03/01/23", "2024/03/02/00")
     val staged = hours.zipWithIndex.flatMap { case (h, hi) =>
       val d = java.nio.file.Paths.get(landing, "alpha", h)
@@ -147,7 +147,7 @@ class CliSpec extends SparkSpec {
   test("R12 multi-table loop tolerates 3 failures, aborts on the 4th") {
     val c = Main.parseConf(confJson).copy(tables =
       (1 to 5).map(i => Main.TableConf(s"t$i", usesIndexedOn = true, 100)),
-      stateDir = java.nio.file.Files.createTempDirectory("cli").toString)
+      stateDir = tempDir("cli").toString)
     // every table fails
     val e = intercept[IllegalStateException] {
       Main.runPull(spark, c, (_, _, _) => throw new RuntimeException("boom"))

@@ -26,7 +26,7 @@ class ConcurrentWriterSpec extends SparkSpec {
   }
 
   test("a rival commit inside the critical section aborts the writer loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccw").toString
+    val dir = tempDir("graft_ccw").toString
     StreamingJobs.applyCdcBatch(
       Seq(Chg(1L, "insert", 1.0, "A", in_chg = true)).toDF(), dir, 0L)
 
@@ -77,7 +77,7 @@ class ConcurrentWriterSpec extends SparkSpec {
     import scala.jdk.CollectionConverters._
     var conflicts = 0
     (0 until 3).foreach { round =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_ccw_race$round").toString
+      val dir = tempDir(s"graft_ccw_race$round").toString
       StreamingJobs.applyCdcBatch(
         Seq(Chg(1L, "insert", 1.0, "base", in_chg = true)).toDF(), dir, 0L)
       val df1 = Seq(Chg(2L, "insert", 2.0, "W1", in_chg = true)).toDF()
@@ -126,7 +126,7 @@ class ConcurrentWriterSpec extends SparkSpec {
     // a base out from under a derivation (keepLast ≥ 2 keeps every
     // replay base), and the final lineage carries EVERY committed row.
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccw_vac_race").toString
+    val dir = tempDir("graft_ccw_vac_race").toString
     (0 to 5).foreach { i =>
       StreamingJobs.applyCdcBatch(
         Seq(Chg(i.toLong, "insert", i.toDouble, "A", in_chg = true)).toDF(), dir, i.toLong)
@@ -160,7 +160,7 @@ class ConcurrentWriterSpec extends SparkSpec {
   }
 
   test("crash replay of the same batch id is idempotent through the guard") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccw_replay").toString
+    val dir = tempDir("graft_ccw_replay").toString
     StreamingJobs.applyCdcBatch(
       Seq(Chg(1L, "insert", 1.0, "A", in_chg = true)).toDF(), dir, 0L)
     val b1 = Seq(Chg(1L, "update", 10.0, "B", in_chg = true))
@@ -172,7 +172,7 @@ class ConcurrentWriterSpec extends SparkSpec {
   }
 
   test("the committer marker is written and satisfies vacuum's store check") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccw_marker").toString
+    val dir = tempDir("graft_ccw_marker").toString
     (0 to 3).foreach { i =>
       StreamingJobs.applyCdcBatch(
         Seq(Chg(i.toLong, "insert", i.toDouble, "A", in_chg = true)).toDF(),
@@ -183,7 +183,7 @@ class ConcurrentWriterSpec extends SparkSpec {
   }
 
   test("listVersions ignores malformed v= names and staging dirs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ccw_list").toString
+    val dir = tempDir("graft_ccw_list").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v=7"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v=oops"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/_staging_v8_abc"))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Similarity
 
 /** q93 full-recall containment (smaller-side prefix filtering): the
@@ -13,7 +12,7 @@ class ContainmentFullSpec extends SparkSpec {
   import spark.implicits._
 
   private def docs(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_containfull").toString
+    val dir = tempDir("graft_containfull").toString
     rows.toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Similarity
 
 /** q92 asymmetric containment: exact-dup fixtures (guaranteed banding —
@@ -11,7 +10,7 @@ class ContainmentSpec extends SparkSpec {
   import spark.implicits._
 
   private def docs(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_contain").toString
+    val dir = tempDir("graft_contain").toString
     rows.toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

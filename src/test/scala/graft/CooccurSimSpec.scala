@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Entity
 
 /** q67 item-item co-occurrence similarity: hand-graph closed form (weights,
@@ -11,7 +10,7 @@ class CooccurSimSpec extends SparkSpec {
   import spark.implicits._
 
   private def fixture(baskets: Seq[Seq[Long]]): String = {
-    val dir = Files.createTempDirectory("graft_cooccur").toString
+    val dir = tempDir("graft_cooccur").toString
     baskets.zipWithIndex.flatMap { case (parts, ok) =>
       parts.map(p => (ok.toLong, p))
     }.toDF("l_orderkey", "l_partkey")

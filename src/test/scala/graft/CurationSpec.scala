@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.queries.{Analytics, Sampling, Similarity}
 
@@ -15,7 +14,7 @@ class CurationSpec extends SparkSpec {
     (0 until n).map(i => s"$tag${i % 7}").mkString(" ")
 
   test("resample: dominant source downsampled, minority sources kept whole") {
-    val d = Files.createTempDirectory("graft_resample").toString
+    val d = tempDir("graft_resample").toString
     // srcBig: 50 docs x 100 toks = 5000; srcA/srcB: 5 docs x 20 toks = 100
     val docs =
       (0 until 50).map(i => (i.toLong, docText(100, "w"), "en", "srcBig", 100L)) ++
@@ -38,7 +37,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("pack: offsets and boundary flags follow the prefix-sum layout") {
-    val d = Files.createTempDirectory("graft_pack").toString
+    val d = tempDir("graft_pack").toString
     // one source, doc sizes 300/300/300: second doc spans the 512 boundary
     val docs = Seq(
       (0L, docText(300, "a"), "en", "s0", 1L),
@@ -58,7 +57,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("quality survivors: the higher-quality near-dup wins; ties break by id") {
-    val d = Files.createTempDirectory("graft_qsurv").toString
+    val d = tempDir("graft_qsurv").toString
     val base = docText(120, "t")
     val richer = base + " extraA extraB extraC extraD extraE extraF"
     val docs = Seq(
@@ -83,7 +82,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("filter verdict: each rule fires on its crafted doc, priority order holds") {
-    val d = Files.createTempDirectory("graft_fverdict").toString
+    val d = tempDir("graft_fverdict").toString
     val stopless = (0 until 40).map(i => s"uniq$i").mkString(" ") // no stopwords
     // pure low_ttr: 18 (low, high) pairs over 3 stopword-lows x 6 highs —
     // 36 tokens, 9 distinct (ttr 0.25 < 0.33), every trigram window carries
@@ -119,7 +118,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("scd2: intervals chain per user and exactly one current row each") {
-    val d = Files.createTempDirectory("graft_scd2").toString
+    val d = tempDir("graft_scd2").toString
     // nanos longs, micro-aligned (the testdata convention)
     def ns(s: Long): Long = s * 1000000000L
     Seq(
@@ -155,7 +154,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("decontam bloom route: synthetic contamination caught, clean docs untouched") {
-    val d = Files.createTempDirectory("graft_bloomdc").toString
+    val d = tempDir("graft_bloomdc").toString
     // hash buckets are data-dependent; generate enough docs that train
     // (bucket<80) and test (bucket>=90) are both non-empty, with one
     // shared 5-gram planted across every doc of one tag

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Evaluation
 
 /** q84 exact two-sample KS + q85 tie-aware Spearman: closed-form fixtures
@@ -18,7 +17,7 @@ class DriftRankSpec extends SparkSpec {
 
   /** events fixture: (userId, eventType, value, inSampleA). */
   private def fixture(rows: Seq[(Long, String, Double, Boolean)]): String = {
-    val dir = Files.createTempDirectory("graft_driftrank").toString
+    val dir = tempDir("graft_driftrank").toString
     rows.zipWithIndex.map { case ((u, et, v, inA), i) =>
       (i.toLong, ((if (inA) WeekA else WeekB) + i * 60L) * 1000000000L,
         u, et, v, "{}")

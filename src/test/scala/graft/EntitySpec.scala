@@ -67,7 +67,7 @@ class EntitySpec extends SparkSpec {
   test("q81: hand baskets produce exactly the supported, confident rules") {
     import spark.implicits._
     // {A,B}×3 + {A,C}: only the A–B pair clears support ≥ 3
-    val dir = java.nio.file.Files.createTempDirectory("graft_rules").toString
+    val dir = tempDir("graft_rules").toString
     val rows = Seq((0L, 1L), (0L, 2L), (1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),
       (3L, 1L), (3L, 3L))
     rows.toDF("l_orderkey", "l_partkey")
@@ -83,7 +83,7 @@ class EntitySpec extends SparkSpec {
   test("q82: equal balances give Gini 0; total concentration gives (n−1)/n") {
     import spark.implicits._
     def giniOf(bals: Seq[Double]): Double = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_gini").toString
+      val dir = tempDir("graft_gini").toString
       bals.zipWithIndex.map { case (b, i) => (i.toLong, "SEG", b) }
         .toDF("c_custkey", "c_mktsegment", "c_acctbal")
         .write.mode("overwrite").parquet(s"$dir/customer.parquet")

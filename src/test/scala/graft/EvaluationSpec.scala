@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Evaluation
 
 /** q65 exact AUC + q66 chi-square drift: closed-form fixtures (perfect /
@@ -14,7 +13,7 @@ class EvaluationSpec extends SparkSpec {
 
   /** events fixture: (userId, value, isPurchase) rows, one per element. */
   private def fixture(rows: Seq[(Long, Double, Boolean)]): String = {
-    val dir = Files.createTempDirectory("graft_eval").toString
+    val dir = tempDir("graft_eval").toString
     rows.zipWithIndex.map { case ((u, v, pos), i) =>
       (i.toLong, (Base + i * 60L) * 1000000000L, u,
         if (pos) "purchase" else "view", v, "{}")
@@ -65,7 +64,7 @@ class EvaluationSpec extends SparkSpec {
       w <- 0 until 3; t <- Seq(true, false); i <- 0 until (if (t) 4 else 8)
     } yield (w.toLong * 100 + i, 1.0, t)
     // spread weeks: reuse fixture but override ts spacing to 7-day steps
-    val dir = Files.createTempDirectory("graft_eval").toString
+    val dir = tempDir("graft_eval").toString
     rows.zipWithIndex.map { case ((u, v, pos), i) =>
       val week = u / 100
       (i.toLong, (Base + week * 7 * 86400L + (i % 100) * 60L) * 1000000000L,
@@ -121,7 +120,7 @@ class EvaluationSpec extends SparkSpec {
       (0 until 2).map(i => (100L + i, 1.0, false)) ++
       (0 until 2).map(i => (200L + i, 1.0, true)) ++       // week 1: 2/10
       (0 until 10).map(i => (300L + i, 1.0, false)))
-    val dir = Files.createTempDirectory("graft_eval").toString
+    val dir = tempDir("graft_eval").toString
     rows.zipWithIndex.map { case ((u, v, pos), i) =>
       val week = u / 200
       (i.toLong, (Base + week * 7 * 86400L + i * 60L) * 1000000000L,

@@ -25,8 +25,8 @@ class FingerprintStreamSpec extends SparkSpec {
 
   test("streamed maintenance lands on the batch fingerprint; replay idempotent") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fp_ck").toString
+    val dir = tempDir("graft_fp").toString
+    val ckpt = tempDir("graft_fp_ck").toString
     val src = MemoryStream[FpRow]
     val q = StreamingJobs.fingerprintMaintain(src.toDF(), h, dir)
       .option("checkpointLocation", ckpt).start()

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -34,14 +33,14 @@ class FormatRoundTripSpec extends SparkSpec {
   private val original = fixture.map { case (k, v) => k -> Option(v) }.toMap
 
   test("JSONL round trip is lossless for every payload") {
-    val out = Files.createTempDirectory("graft_rt_json").toString
+    val out = tempDir("graft_rt_json").toString
     df.write.mode("overwrite").json(out)
     val back = collect(spark.read.schema(df.schema).json(out))
     assert(back === original)
   }
 
   test("Avro round trip is lossless for every payload") {
-    val out = Files.createTempDirectory("graft_rt_avro").toString
+    val out = tempDir("graft_rt_avro").toString
     val fmt = "org.apache.spark.sql.avro.AvroFileFormat"
     df.write.mode("overwrite").format(fmt).save(out)
     val back = collect(spark.read.schema(df.schema).format(fmt).load(out))
@@ -49,7 +48,7 @@ class FormatRoundTripSpec extends SparkSpec {
   }
 
   test("XML round trip with the lane's options is lossless for every payload") {
-    val out = Files.createTempDirectory("graft_rt_xml").toString
+    val out = tempDir("graft_rt_xml").toString
     df.write.mode("overwrite").option("rowTag", "doc").format("xml").save(out)
     val back = collect(spark.read.schema(df.schema)
       .option("rowTag", "doc").option("ignoreSurroundingSpaces", "false")
@@ -58,7 +57,7 @@ class FormatRoundTripSpec extends SparkSpec {
   }
 
   test("CSV with pinned null sentinel keeps empty and null distinct; sentinel-literal text is the documented loss") {
-    val out = Files.createTempDirectory("graft_rt_csv").toString
+    val out = tempDir("graft_rt_csv").toString
     df.write.mode("overwrite").option("nullValue", "\\N").csv(out)
     val back = collect(spark.read.schema(df.schema)
       .option("nullValue", "\\N").csv(out))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.{Analytics, TextOps}
 
 /** q89 lead-lag cross-correlation, q90 Simpson diversity, q91 ordered
@@ -16,7 +15,7 @@ class FunnelDiversitySpec extends SparkSpec {
 
   /** events fixture: (userId, eventType, offsetSeconds). */
   private def events(rows: Seq[(Long, String, Long)]): String = {
-    val dir = Files.createTempDirectory("graft_funnel").toString
+    val dir = tempDir("graft_funnel").toString
     rows.zipWithIndex.map { case ((u, et, off), i) =>
       (i.toLong, (Base + off) * 1000000000L, u, et, 1.0, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -54,7 +53,7 @@ class FunnelDiversitySpec extends SparkSpec {
 
   /** documents fixture for q90. */
   private def docs(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_simpson").toString
+    val dir = tempDir("graft_simpson").toString
     rows.toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => PropTest}
 import graft.queries.Analytics
@@ -12,7 +11,7 @@ import graft.queries.Analytics
   * one fixture; this proves the algebra over arbitrary sparse series.
   * Raw scalacheck runner, as in PropertySpec (no bridge in the cache);
   * few iterations — each case runs real Spark jobs. */
-class GapfillPropertySpec extends AnyFunSuite {
+class GapfillPropertySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSpec.session
 
   // hour-aligned so date_trunc('hour') lands exactly on base + h*3600
@@ -34,7 +33,7 @@ class GapfillPropertySpec extends AnyFunSuite {
   test("gap-fill grid is contiguous, zero-filled, and cum ends at the total") {
     import spark.implicits._
     val prop = Prop.forAll(seriesGen) { series =>
-      val dir = Files.createTempDirectory("graft_gapfill_prop").toString
+      val dir = tempDir("graft_gapfill_prop").toString
       val rows = for {
         (t, byHour) <- series.toSeq
         (h, n) <- byHour.toSeq

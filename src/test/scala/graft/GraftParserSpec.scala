@@ -13,7 +13,7 @@ class GraftParserSpec extends SparkSpec {
   import spark.implicits._
 
   private def seed(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sqlvac").toString
+    val dir = tempDir("graft_sqlvac").toString
     (0 to 3).foreach { i =>
       val b = Seq(Chg(i.toLong + 1, "insert", i * 1.0, "A", in_chg = true))
       StreamingJobs.applyCdcBatch(b.toDF(), dir, i.toLong)
@@ -81,7 +81,7 @@ class GraftParserSpec extends SparkSpec {
   test("VACUUM refuses a directory that is not a graft version store") {
     // coincidental v=N children with non-parquet contents and no marker:
     // the round-9 review's "silently destroyed" scenario must now refuse
-    val dir = java.nio.file.Files.createTempDirectory("graft_notstore").toString
+    val dir = tempDir("graft_notstore").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v=1"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v=2"))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/v=3"))

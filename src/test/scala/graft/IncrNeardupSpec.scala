@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.queries.Similarity
 
@@ -21,7 +20,7 @@ class IncrNeardupSpec extends SparkSpec {
   private def mod = 7L
 
   test("planted fixture: base hit, delta-self hit, clean doc") {
-    val d = Files.createTempDirectory("graft_incr_fix").toString
+    val d = tempDir("graft_incr_fix").toString
     Seq(
       (1L, "alpha beta gamma delta epsilon zeta", "en"),   // base
       (2L, "one two three four five six", "en"),           // base, unrelated

@@ -10,7 +10,7 @@ import graft.ingest.Ingest
 class IngestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("graft").toString
+  private def tmp(): String = tempDir("graft").toString
 
   private def writeEnvelope(dir: String, name: String, objs: Seq[String]): Unit = {
     val body =
@@ -146,7 +146,7 @@ class IngestSpec extends SparkSpec {
   test("compactBronze merges accreted small files, preserves rows, skips steady partitions") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val bronze = java.nio.file.Files.createTempDirectory("graft_compact_t").toString + "/b"
+    val bronze = tempDir("graft_compact_t").toString + "/b"
     // 5 append runs → every touched partition accretes ≥5 part-files
     (0 until 5).foreach { run =>
       val df = (0 until 200).map { i =>

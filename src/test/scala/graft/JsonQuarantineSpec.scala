@@ -27,7 +27,7 @@ class JsonQuarantineSpec extends SparkSpec {
     StructField("_corrupt_record", StringType)))
 
   private def fixture: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_badjsonl")
+    val dir = tempDir("graft_badjsonl")
     val lines = Seq(
       """{"doc_id": 1, "text": "alpha"}""",
       """{"doc_id": 2, "text": "beta""",              // truncated mid-string

@@ -77,7 +77,7 @@ class KillRestartSpec extends SparkSpec {
   }
 
   test("foreachBatch CDC: crash after sink write, restart from checkpoint ≡ uninterrupted run") {
-    val root = java.nio.file.Files.createTempDirectory("graft_kr_cdc").toString
+    val root = tempDir("graft_kr_cdc").toString
     writeChangeFiles(s"$root/src")
 
     // interrupted run: dies inside batch 1 (after v=1 is already written)
@@ -155,7 +155,7 @@ class KillRestartSpec extends SparkSpec {
       .as[(String, Long)].collect().toSet
 
   test("stateful window agg: crash mid-stream, restart restores state store ≡ uninterrupted run") {
-    val root = java.nio.file.Files.createTempDirectory("graft_kr_win").toString
+    val root = tempDir("graft_kr_win").toString
     writeEventFiles(s"$root/src")
 
     val crash = new AtomicBoolean(true)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.{Entity, TextOps}
 
 /** q86 graph modularity + q87 n-gram novelty: closed-form fixtures (one
@@ -14,7 +13,7 @@ class ModularityNoveltySpec extends SparkSpec {
   /** lineitem+part fixture from baskets (orderkey → parts) and a brand map. */
   private def graph(baskets: Seq[(Long, Seq[Long])],
                     brands: Map[Long, String]): String = {
-    val dir = Files.createTempDirectory("graft_modularity").toString
+    val dir = tempDir("graft_modularity").toString
     baskets.flatMap { case (ok, pks) => pks.map(pk => (ok, pk)) }
       .toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
@@ -91,7 +90,7 @@ class ModularityNoveltySpec extends SparkSpec {
 
   /** documents fixture: (docId, lang, text) — even ids = reference half. */
   private def docs(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_novelty").toString
+    val dir = tempDir("graft_novelty").toString
     rows.toDF("doc_id", "lang", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir

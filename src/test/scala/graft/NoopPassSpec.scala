@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** [[Bench.noopPass]] is the one definition of how a lane is timed (Bench,
-  * NoopTime, JobProbe and BarrierAB all call it): a pass returns its time or
+  * NoopTime and JobProbe all call it): a pass returns its time or
   * the lane's non-fatal failure, releases every cache the lane persisted
   * either way, and never swallows an interrupt. */
 class NoopPassSpec extends SparkSpec {

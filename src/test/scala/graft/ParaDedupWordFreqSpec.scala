@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.TextOps
 
 /** q26_para_dedup (C4-style duplicated-chunk removal + doc rebuild) and
@@ -13,7 +12,7 @@ class ParaDedupWordFreqSpec extends SparkSpec {
     (0 until n).map(i => s"$prefix$i").mkString(" ")
 
   private lazy val dedupDir: String = {
-    val d = Files.createTempDirectory("graft_para").toString
+    val d = tempDir("graft_para").toString
     val A = toks("a", 20); val B = toks("b", 20)
     val C = toks("c", 20); val E = toks("e", 20)
     Seq(
@@ -40,7 +39,7 @@ class ParaDedupWordFreqSpec extends SparkSpec {
   }
 
   test("para_dedup rebuild preserves chunk order for multi-chunk survivors") {
-    val d = Files.createTempDirectory("graft_para_ord").toString
+    val d = tempDir("graft_para_ord").toString
     val text = (0 until 100).map(i => s"w$i").mkString(" ") // 5 unique chunks
     Seq((9L, text, "en", "s", 100L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -51,7 +50,7 @@ class ParaDedupWordFreqSpec extends SparkSpec {
   }
 
   test("wordfreq matches the hand computation and its global invariants") {
-    val d = Files.createTempDirectory("graft_wf").toString
+    val d = tempDir("graft_wf").toString
     Seq(
       (1L, "a a b", "en", "s", 5L),
       (2L, "b c", "en", "s", 3L)

@@ -12,7 +12,7 @@ class PartitionPruneSpec extends SparkSpec {
 
   test("lang predicate prunes partitions at planning time") {
     val dir = "/root/testdata/sf0.01"
-    val out = java.nio.file.Files.createTempDirectory("graft_prune_spec").toString
+    val out = tempDir("graft_prune_spec").toString
     graft.core.Tables.documents(spark, dir)
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     val df = graft.queries.Relational3.partitionedDocs(spark, out)

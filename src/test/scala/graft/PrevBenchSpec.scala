@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * clock, CPU-rate × clock, fsync-rate / io — so BENCH_r{N}.json carries a
   * mechanical replacement for prose clock claims.
   */
-class PrevBenchSpec extends AnyFunSuite {
+class PrevBenchSpec extends AnyFunSuite with TempDirs {
 
   // a minimal driver-wrapper shape: tail carries the end of the FULL line
   // (per-lane noop dict), parsed carries the compact line
@@ -26,7 +26,7 @@ class PrevBenchSpec extends AnyFunSuite {
       |}""".stripMargin
 
   private def prevFile(): java.io.File = {
-    val f = java.nio.file.Files.createTempFile("prevbench", ".json")
+    val f = java.nio.file.Files.createTempFile(tempDir("prevbench"), "prevbench", ".json")
     java.nio.file.Files.write(f, wrapper.getBytes("UTF-8"))
     f.toFile
   }
@@ -81,7 +81,7 @@ class PrevBenchSpec extends AnyFunSuite {
       s"mt fields leaked without a prev mt anchor: $noMt")
     val withMt = wrapper.replace("\"anchor_s\":0.8,",
       "\"anchor_s\":0.8,\"anchor_mt_s\":1.0,")
-    val f2 = java.nio.file.Files.createTempFile("prevbench_mt", ".json")
+    val f2 = java.nio.file.Files.createTempFile(tempDir("prevbench"), "prevbench_mt", ".json")
     java.nio.file.Files.write(f2, withMt.getBytes("UTF-8"))
     val p2 = graft.core.PrevBench.load(f2.toFile)
     assert(p2.get.anchorMt === Some(1.0))
@@ -99,7 +99,7 @@ class PrevBenchSpec extends AnyFunSuite {
 
   test("movers: a zero prev lane time never emits Infinity (r13 ADVICE)") {
     val withZero = wrapper.replace("\"q34_funnel\":0.4", "\"q34_funnel\":0")
-    val f2 = java.nio.file.Files.createTempFile("prevbench_zero", ".json")
+    val f2 = java.nio.file.Files.createTempFile(tempDir("prevbench"), "prevbench_zero", ".json")
     java.nio.file.Files.write(f2, withZero.getBytes("UTF-8"))
     val rpt = graft.core.PrevBench.report(0.8, 300.0, 200.0, 200000.0,
       70000.0, 20000.0, Map("q34_funnel" -> 3.0),
@@ -138,7 +138,7 @@ class PrevBenchSpec extends AnyFunSuite {
   }
 
   test("locate skips this round's own wrapped artifact (r13 ADVICE)") {
-    val dir = java.nio.file.Files.createTempDirectory("prevbench_loc")
+    val dir = tempDir("prevbench_loc")
     def put(name: String, text: String): Unit =
       java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
     put("BENCH_r12.json", wrapper.replace("\"anchor_s\":0.8", "\"anchor_s\":0.71"))
@@ -159,7 +159,7 @@ class PrevBenchSpec extends AnyFunSuite {
     // anchor (0.917) while bench_result.json holds the full-precision double
     // — exact Double equality never matched these, silently defeating the
     // exclusion; the rounded compare must
-    val dir = java.nio.file.Files.createTempDirectory("prevbench_round")
+    val dir = tempDir("prevbench_round")
     def put(name: String, text: String): Unit =
       java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
     put("BENCH_r12.json", wrapper.replace("\"anchor_s\":0.8", "\"anchor_s\":0.71"))
@@ -185,7 +185,7 @@ class PrevBenchSpec extends AnyFunSuite {
     // round's numbers (it persists across the close), and the judge wrote
     // VERDICT.md after the wrap — the stale fingerprint must not exclude
     // the legitimate newest wrapper
-    val dir = java.nio.file.Files.createTempDirectory("prevbench_stale")
+    val dir = tempDir("prevbench_stale")
     def put(name: String, text: String): java.io.File = {
       val p = dir.resolve(name)
       java.nio.file.Files.write(p, text.getBytes("UTF-8"))
@@ -231,7 +231,7 @@ class PrevBenchSpec extends AnyFunSuite {
       |}""".stripMargin
 
   test("load reads the total from parsed, not from the tail's bars block") {
-    val f = java.nio.file.Files.createTempFile("prevbench_r16", ".json")
+    val f = java.nio.file.Files.createTempFile(tempDir("prevbench"), "prevbench_r16", ".json")
     java.nio.file.Files.write(f, r16Layout.getBytes("UTF-8"))
     val p = graft.core.PrevBench.load(f.toFile).get
     assert(p.totalNoop === 223.327)
@@ -239,7 +239,7 @@ class PrevBenchSpec extends AnyFunSuite {
   }
 
   test("locate only compares artifacts measured at this run's scale factor") {
-    val dir = java.nio.file.Files.createTempDirectory("prevbench_sf")
+    val dir = tempDir("prevbench_sf")
     def put(name: String, text: String): Unit =
       java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
     put("BENCH_r15.json", r16Layout.replace("\"sf\": 0.1", "\"sf\": 0.01")

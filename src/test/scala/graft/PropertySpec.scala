@@ -7,7 +7,7 @@ import graft.core.ApiLimitCalculator
 /** ScalaCheck properties (SURVEY §5d): invariants the reference needs but
   * never tests. Raw scalacheck runner (the scalatest bridge artifact isn't
   * in the offline cache). */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with TempDirs {
 
   private def check(prop: Prop, n: Int = 100): Unit = {
     val res = PropTest.check(PropTest.Parameters.default.withMinSuccessfulTests(n), prop)
@@ -86,7 +86,7 @@ class PropertySpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     check(Prop.forAll(Gen.listOfN(25, Gen.choose(1, 120))) { (sizes: List[Int]) =>
-      val d = java.nio.file.Files.createTempDirectory("graft_packprop").toString
+      val d = tempDir("graft_packprop").toString
       sizes.zipWithIndex.map { case (n, i) =>
         (i.toLong, (0 until n).map(j => s"t$j").mkString(" "), "en", "s0", 1L)
       }.toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 import graft.queries.Relational3
@@ -15,7 +14,7 @@ class Relational3Spec extends SparkSpec {
   private def ts(s: String) = Timestamp.valueOf(s)
 
   test("profile counts real NULLs and distincts; min/max skip NULLs") {
-    val d = Files.createTempDirectory("graft_r3prof").toString
+    val d = tempDir("graft_r3prof").toString
     Seq(
       (1L, Option(10L), Option("A"), Option(5.0), Option(ts("2024-01-02 00:00:00")), Option("HI")),
       (2L, None,        Option("B"), None,        Option(ts("2024-01-01 00:00:00")), None),
@@ -35,7 +34,7 @@ class Relational3Spec extends SparkSpec {
   }
 
   test("outer join keeps one-side-only days; both_sides flags correctly") {
-    val d = Files.createTempDirectory("graft_r3outer").toString
+    val d = tempDir("graft_r3outer").toString
     Seq((1L, 1L, "O", 1.0, ts("2024-01-01 00:00:00"), "P1"),
         (2L, 1L, "O", 1.0, ts("2024-01-02 00:00:00"), "P1"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -56,7 +55,7 @@ class Relational3Spec extends SparkSpec {
   }
 
   test("diff emits every verdict and drops unchanged keys") {
-    val d = Files.createTempDirectory("graft_r3diff").toString
+    val d = tempDir("graft_r3diff").toString
     // snapshot membership: old = %7 != 0, new = %5 != 0, update if %3 == 0
     //  6 -> both, %3==0     -> update
     //  7 -> new only (%7=0) -> insert

@@ -93,7 +93,7 @@ class RestPullE2ESpec extends SparkSpec {
     // contract (reference semantics CommCareAPIHandler.py:261-262: the
     // watermark advances only after a fully successful run).
     serveFlaky(cutAfterPages = 3) { (url, healed) =>
-      val root = java.nio.file.Files.createTempDirectory("rcrash").toString
+      val root = tempDir("rcrash").toString
       val bronze = s"$root/b"
       val state = new StateStore(s"$root/s")
       val n1 = Ingest.restPullRun(spark, url, bronze, state,
@@ -151,7 +151,7 @@ class RestPullE2ESpec extends SparkSpec {
     // and no partial bronze may land. The healed re-run then equals an
     // uninterrupted single pull of the window.
     serveFlaky(cutAfterPages = 2) { (url, healed) =>
-      val root = java.nio.file.Files.createTempDirectory("rcrashp").toString
+      val root = tempDir("rcrashp").toString
       val state = new StateStore(s"$root/s")
       // custom range (both bounds pushed) → the scan plans 3 concurrent
       // slice partitions — the distributed-extraction shape under test
@@ -177,8 +177,8 @@ class RestPullE2ESpec extends SparkSpec {
 
   test("REST → bronze → watermark → incremental re-pull (R1-R8 chain)") {
     serve() { url =>
-      val bronze = java.nio.file.Files.createTempDirectory("rb").toString + "/b"
-      val state = new StateStore(java.nio.file.Files.createTempDirectory("rs").toString)
+      val bronze = tempDir("rb").toString + "/b"
+      val state = new StateStore(tempDir("rs").toString)
 
       // run 1: cold start, upper bound = hour 19 inclusive
       val n1 = Ingest.restPullRun(spark, url, bronze, state,
@@ -215,7 +215,7 @@ class RestPullE2ESpec extends SparkSpec {
   test("one landing pass: a pull runs 3 Spark jobs, caches nothing, pages the API once") {
     val requests = new AtomicInteger(0)
     serve(requests) { url =>
-      val root = java.nio.file.Files.createTempDirectory("rone").toString
+      val root = tempDir("rone").toString
       val state = new StateStore(s"$root/s")
       val jobs = new AtomicInteger(0)
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -245,7 +245,7 @@ class RestPullE2ESpec extends SparkSpec {
 
   test("an empty window lands no parquet file and still advances the watermark") {
     serve() { url =>
-      val root = java.nio.file.Files.createTempDirectory("rempty").toString
+      val root = tempDir("rempty").toString
       val state = new StateStore(s"$root/s")
       state.put("last_successful_job_time", "2024-06-02 05:00:00") // the last fixture row
       val n = Ingest.restPullRun(spark, url, s"$root/b", state,
@@ -268,8 +268,8 @@ class RestPullE2ESpec extends SparkSpec {
   test("off a UTC JVM zone, the resume starts right after the stored watermark") {
     inNewYork {
       serve() { url =>
-        val bronze = java.nio.file.Files.createTempDirectory("rtz").toString + "/b"
-        val state = new StateStore(java.nio.file.Files.createTempDirectory("rtzs").toString)
+        val bronze = tempDir("rtz").toString + "/b"
+        val state = new StateStore(tempDir("rtzs").toString)
         val n1 = Ingest.restPullRun(spark, url, bronze, state,
           java.time.Instant.parse("2024-06-01T19:00:00Z"), limit = 7, slices = 3)
         assert(n1 === 20)

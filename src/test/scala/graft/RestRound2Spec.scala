@@ -102,8 +102,8 @@ class RestRound2Spec extends SparkSpec {
   test("R7 cycle: probe batch calibrates api_limit, persisted limit drives " +
     "the NEXT run's page size (py:96-156)") {
     serve(40) { (url, seen) =>
-      val bronze = java.nio.file.Files.createTempDirectory("r7b").toString + "/b"
-      val state = new StateStore(java.nio.file.Files.createTempDirectory("r7s").toString)
+      val bronze = tempDir("r7b").toString + "/b"
+      val state = new StateStore(tempDir("r7s").toString)
       val key = "case.api_limit"
 
       // run 1: cold start — seed limit 7 is used, then recalibrated from the

@@ -153,8 +153,8 @@ class RestRound3Spec extends SparkSpec {
   test("custom-range restPullRun extracts the window but never advances the " +
     "watermark (CommCareAPIHandler.py:158-162,261-262)") {
     recordingServe(n = 8) { (url, uris) =>
-      val bronze = java.nio.file.Files.createTempDirectory("graft_cr").toString + "/b"
-      val stateDir = java.nio.file.Files.createTempDirectory("graft_cr_s").toString
+      val bronze = tempDir("graft_cr").toString + "/b"
+      val stateDir = tempDir("graft_cr_s").toString
       val state = new StateStore(stateDir)
       state.put("last_successful_job_time", "2024-01-01 00:03:00")
 

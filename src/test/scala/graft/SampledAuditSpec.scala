@@ -29,7 +29,7 @@ class SampledAuditSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val out = java.nio.file.Files.createTempDirectory("graft_sampaudit").toString
+    val out = tempDir("graft_sampaudit").toString
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
     (0 until 8).map(i => docs.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
       .reduce(_ unionByName _)

@@ -30,9 +30,9 @@ class ScaleToolsSpec extends SparkSpec {
   }
 
   test("streaming ingest: file stream → hour-partitioned bronze, checkpoint resumes") {
-    val land = Files.createTempDirectory("s_land").toString
-    val bronze = Files.createTempDirectory("s_bronze").toString + "/b"
-    val ckpt = Files.createTempDirectory("s_ckpt").toString
+    val land = tempDir("s_land").toString
+    val bronze = tempDir("s_bronze").toString + "/b"
+    val ckpt = tempDir("s_ckpt").toString
     def envelope(name: String, ids: Seq[Int]): Unit = {
       val objs = ids.map(i =>
         s"""{"id": $i, "indexed_on": "2024-05-01T0$i:00:00.000000Z", "payload": "p$i"}""")

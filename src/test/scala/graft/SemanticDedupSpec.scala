@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.queries.Similarity
 
@@ -11,7 +10,7 @@ class SemanticDedupSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_semdedup").toString
+    val d = tempDir("graft_semdedup").toString
     def basis(i: Int): Array[Float] = {
       val v = Array.fill(8)(0.0f); v(i % 8) = 1.0f; v
     }
@@ -51,7 +50,7 @@ class SemanticDedupSpec extends SparkSpec {
   }
 
   test("near-orthogonal corpus: everything survives") {
-    val d2 = Files.createTempDirectory("graft_semdedup_orth").toString
+    val d2 = tempDir("graft_semdedup_orth").toString
     (0 until 12).map { i =>
       val v = Array.fill(16)(0.0f); v(i) = 1.0f
       (i.toLong, "x", v)

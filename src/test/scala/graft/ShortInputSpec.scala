@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.queries.{Sampling, Similarity, TextOps}
 
@@ -14,7 +13,7 @@ class ShortInputSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_short").toString
+    val d = tempDir("graft_short").toString
     Seq(
       (0L, "one", "en", "src0", 3L),
       (1L, "two words", "en", "src0", 9L),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Similarity
 
 /** Adversarial viral-bucket fixtures for the banded candidate lanes
@@ -17,7 +16,7 @@ class SkewBucketSpec extends SparkSpec {
   private val Viral = 12 // identical docs — every band bucket holds all 12
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_viral_bucket").toString
+    val d = tempDir("graft_viral_bucket").toString
     val boiler = "terms of service apply to all content in this collection"
     val docs =
       // viral block: 12 byte-identical docs

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Similarity
 
 /** Adversarial skew fixture for q24_jaccard_pairs: one VIRAL shingle shared
@@ -14,7 +13,7 @@ class SkewJaccardSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_viral").toString
+    val d = tempDir("graft_viral").toString
     val viral = "shared boilerplate header" // one 3-gram in every doc
     val docs =
       // 6 mutually-dissimilar docs: only the viral shingle in common
@@ -47,7 +46,7 @@ class SkewJaccardSpec extends SparkSpec {
     // as hot like any other but USING-style anti/semi joins would match it
     // null-unsafely — the null-safe <=> routing must keep the two paths
     // bit-identical AND actually divert the viral posting.
-    val d = Files.createTempDirectory("graft_viral_null").toString
+    val d = tempDir("graft_viral_null").toString
     val viral = "shared boilerplate header"
     val docs =
       (0 until 6).map(i =>

@@ -45,8 +45,7 @@ class SortSkipSpec extends SparkSpec {
     val sorted = rowGroupRanges(sortedDir)
     assert(sorted.size >= 8, s"expected >=8 clusters, got ${sorted.size}")
 
-    val unsortedDir = java.nio.file.Files
-      .createTempDirectory("graft_unsorted").toString
+    val unsortedDir = tempDir("graft_unsorted").toString
     graft.core.Tables.events(spark, sf01)
       .repartition(8) // hash-scatter: every file sees the whole domain
       .write.mode("overwrite").parquet(unsortedDir)

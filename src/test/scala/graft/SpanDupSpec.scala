@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Similarity
 
 /** q26_span_dup: substring-span exact dedup — short-doc guard, exact
@@ -12,7 +11,7 @@ class SpanDupSpec extends SparkSpec {
     (0 until n).map(i => s"$prefix$i").mkString(" ")
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_span").toString
+    val d = tempDir("graft_span").toString
     val common55 = toks("c", 55) // 55 shared tokens → 6 shared 50-spans
     val docs =
       Seq(
@@ -52,7 +51,7 @@ class SpanDupSpec extends SparkSpec {
   }
 
   test("corpus of only short docs yields an empty frame, not a crash") {
-    val d = Files.createTempDirectory("graft_span_short").toString
+    val d = tempDir("graft_span_short").toString
     Seq((1L, toks("a", 5), "en", "s", 5L), (2L, toks("a", 49), "en", "s", 49L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$d/documents.parquet")

@@ -1,11 +1,30 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Temp dirs a spec owns: every [[tempDir]] is deleted recursively after
+  * the spec's last test, so a test run leaves no scratch behind. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val tempDirs = scala.collection.mutable.ListBuffer.empty[java.nio.file.Path]
+
+  def tempDir(prefix: String): java.nio.file.Path = tempDirs.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.synchronized {
+      tempDirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      tempDirs.clear()
+    }
+}
+
 /** Shared local SparkSession for specs. */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+trait SparkSpec extends AnyFunSuite with TempDirs {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
 

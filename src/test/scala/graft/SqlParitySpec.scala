@@ -39,7 +39,7 @@ class SqlParitySpec extends SparkSpec {
   }
 
   test("csv / orc / json round-trips preserve values") {
-    val dir = java.nio.file.Files.createTempDirectory("fmt").toString
+    val dir = tempDir("fmt").toString
     val src = graft.core.Tables.table(spark, sf001, "nation")
     src.write.option("header", "true").csv(s"$dir/csv")
     src.write.orc(s"$dir/orc")

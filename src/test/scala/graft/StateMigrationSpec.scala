@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -30,7 +29,7 @@ class StateMigrationSpec extends SparkSpec {
     implicit val sc = spark.sqlContext
     withConfs("spark.sql.streaming.stateStore.providerClass" -> Provider) {
       // generation 1: accumulate counts, then stop
-      val ckpt1 = Files.createTempDirectory("graft_mig_gen1").toString
+      val ckpt1 = tempDir("graft_mig_gen1").toString
       val src1 = MemoryStream[Ev]
       val q1 = StatefulProcessors.runningCounts(src1.toDF())
         .writeStream.format("memory").queryName("mig_gen1")
@@ -53,7 +52,7 @@ class StateMigrationSpec extends SparkSpec {
       assert(carriedMap === Map(1L -> 2L, 2L -> 1L), s"got $carriedMap")
 
       // generation 2: NEW checkpoint, seeded with gen-1's state
-      val ckpt2 = Files.createTempDirectory("graft_mig_gen2").toString
+      val ckpt2 = tempDir("graft_mig_gen2").toString
       val src2 = MemoryStream[Ev]
       val q2 = StatefulProcessors.runningCountsSeeded(src2.toDF(), carried.toDF())
         .writeStream.format("memory").queryName("mig_gen2")

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -21,7 +20,7 @@ class StateReadSpec extends SparkSpec {
 
   test("Q41: statestore read returns exactly the unclosed windows, with live counts") {
     implicit val sc = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft_state_spec").toString
+    val ckpt = tempDir("graft_state_spec").toString
     val src = MemoryStream[Ev]
     val q = StreamingJobs.tumblingCounts(src.toDF())
       .writeStream.format("memory").queryName("q41_spec_out")
@@ -54,7 +53,7 @@ class StateReadSpec extends SparkSpec {
 
   test("Q41: the reader generalizes to the dedup operator's key-only state") {
     implicit val sc = spark.sqlContext
-    val ckpt = Files.createTempDirectory("graft_state_spec_dd").toString
+    val ckpt = tempDir("graft_state_spec_dd").toString
     val src = MemoryStream[Ev]
     val q = StreamingJobs.dedupWithinWatermark(src.toDF())
       .writeStream.format("memory").queryName("q41_dd_out")

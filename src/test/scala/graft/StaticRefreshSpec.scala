@@ -25,7 +25,7 @@ class StaticRefreshSpec extends SparkSpec {
 
   test("foreachBatch re-read picks up a dim overwrite between micro-batches (the guaranteed recipe)") {
     implicit val sc = spark.sqlContext
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dimv").toString
+    val dimDir = tempDir("graft_dimv").toString
     Seq((1L, "BUILDING")).toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(dimDir)
     val src = MemoryStream[EvR]
@@ -56,7 +56,7 @@ class StaticRefreshSpec extends SparkSpec {
 
   test("a pre-built parquet static frame does NOT track an overwrite (why the recipe exists)") {
     implicit val sc = spark.sqlContext
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dimw").toString
+    val dimDir = tempDir("graft_dimw").toString
     Seq((1L, "BUILDING")).toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(dimDir)
     val dims = spark.read.parquet(dimDir) // listing resolved HERE

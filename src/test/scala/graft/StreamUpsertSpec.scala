@@ -33,8 +33,8 @@ class StreamUpsertSpec extends SparkSpec {
 
   test("streamed CDC apply equals the batch fold of the same micro-batches") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdc_ck").toString
+    val dir = tempDir("graft_cdc").toString
+    val ckpt = tempDir("graft_cdc_ck").toString
     val src = MemoryStream[Chg]
     val q = StreamingJobs.cdcApply(src.toDF(), dir)
       .option("checkpointLocation", ckpt).start()
@@ -68,7 +68,7 @@ class StreamUpsertSpec extends SparkSpec {
   }
 
   test("replaying a delivered batch rewrites its version identically (at-least-once safety)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_rp").toString
+    val dir = tempDir("graft_cdc_rp").toString
     StreamingJobs.applyCdcBatch(b0.toDF(), dir, 0L)
     StreamingJobs.applyCdcBatch(b1.toDF(), dir, 1L)
     val before = targetState(dir, 1L).collect().toSet
@@ -82,7 +82,7 @@ class StreamUpsertSpec extends SparkSpec {
   }
 
   test("a torn version write from a crashed attempt is healed by the replay") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdc_torn").toString
+    val dir = tempDir("graft_cdc_torn").toString
     StreamingJobs.applyCdcBatch(b0.toDF(), dir, 0L)
     StreamingJobs.applyCdcBatch(b1.toDF(), dir, 1L)
     val good = targetState(dir, 1L).collect().toSet

@@ -203,9 +203,9 @@ class StreamingSpec extends SparkSpec {
 
   test("Q31b: foreachBatch sink is idempotent under batch replay") {
     implicit val sc = spark.sqlContext
-    val out = java.nio.file.Files.createTempDirectory("graft_febatch").toString
+    val out = tempDir("graft_febatch").toString
     val src = MemoryStream[Ev]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_febatch_ck").toString
+    val ckpt = tempDir("graft_febatch_ck").toString
     def run(): Unit = {
       val q = StreamingJobs.foreachBatchSink(src.toDF(), out)
         .option("checkpointLocation", ckpt).start()
@@ -220,7 +220,7 @@ class StreamingSpec extends SparkSpec {
     // must leave the landed data identical, not doubled
     // stage a copy OUTSIDE the sink dir: Spark refuses to overwrite a path
     // it is reading from, and partition discovery must not see the staging
-    val stage = java.nio.file.Files.createTempDirectory("graft_febatch_replay").toString
+    val stage = tempDir("graft_febatch_replay").toString
     spark.read.parquet(s"$out/batch_id=0")
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
     // re-deliver batch 0's rows through the sink's own write shape
@@ -272,7 +272,7 @@ class StreamingSpec extends SparkSpec {
 
   test("Q29c twin: doc_id-ordered streaming arrival reproduces q29_neardup_batch exactly") {
     implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_twin").toString
+    val dir = tempDir("graft_neardup_twin").toString
     val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val t2 = "alpha beta gamma delta epsilon zeta eta theta iota lambda" // near-dup of t1
     val t3 = "totally different words about completely other topics entirely here now"

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.queries.Analytics
 
@@ -19,7 +18,7 @@ class TrendSpec extends SparkSpec {
 
   /** Write an events fixture: one row per (type, hourOffset, value). */
   private def fixture(rows: Seq[(String, Int, Double)]): String = {
-    val dir = Files.createTempDirectory("graft_trend").toString
+    val dir = tempDir("graft_trend").toString
     rows.zipWithIndex.map { case ((t, h, v), i) =>
       (i.toLong, (Base + h * 3600L + 11L) * 1000000000L, 1L, t, v, "{}")
     }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -76,7 +75,7 @@ class TrendSpec extends SparkSpec {
     val rows = Seq(("a", 0, 1L), ("a", 0, 2L), ("a", 2 * 24, 3L),
       ("a", 9 * 24, 2L)).map { case (t, h, u) => (t, h, u, 1.0) }
     val dir = {
-      val d = java.nio.file.Files.createTempDirectory("graft_wau").toString
+      val d = tempDir("graft_wau").toString
       rows.zipWithIndex.map { case ((t, h, u, v), i) =>
         (i.toLong, (Base + h * 3600L + 11L) * 1000000000L, u, t, v, "{}")
       }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -159,7 +158,7 @@ class TrendSpec extends SparkSpec {
       (i.toLong, java.sql.Date.valueOf(mon1))) ++
       (for (i <- 1 to 12; c <- 1 to i) yield
         (i.toLong, java.sql.Date.valueOf(mon1.plusDays(7))))
-    val dir = java.nio.file.Files.createTempDirectory("graft_movers").toString
+    val dir = tempDir("graft_movers").toString
     rows.toDF("l_partkey", "l_shipdate")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = graft.queries.Analytics.q80RankMovers(spark, dir).collect()

@@ -21,7 +21,7 @@ class VacuumSpec extends SparkSpec {
   private val b3 = Seq(Chg(4L, "update", 44.0, "C", in_chg = true))
 
   private def seed(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val dir = tempDir("graft_vac").toString
     Seq(b0, b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
       StreamingJobs.applyCdcBatch(b.toDF(), dir, i.toLong)
     }

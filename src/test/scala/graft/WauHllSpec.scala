@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.queries.Analytics
 
 /** q71 sketch-union rolling WAU: exactness in the sparse regime, bounded
@@ -14,7 +13,7 @@ class WauHllSpec extends SparkSpec {
 
   /** days → distinct-user ranges (users overlap across days by design). */
   private def fixture(days: Seq[(Int, Range)]): String = {
-    val dir = Files.createTempDirectory("graft_wauhll").toString
+    val dir = tempDir("graft_wauhll").toString
     days.flatMap { case (day, users) =>
       users.map(u => (day.toLong * 1000000 + u,
         (Base + day * 86400L + (u % 3600)) * 1000000000L,

@@ -47,8 +47,7 @@ class ZorderSpec extends SparkSpec {
     val zSupp = rowGroupRanges(zDir, "l_suppkey")
     assert(zPart.size >= 16, s"expected >=16 clusters, got ${zPart.size}")
 
-    val linDir = java.nio.file.Files
-      .createTempDirectory("graft_linsort").toString
+    val linDir = tempDir("graft_linsort").toString
     graft.core.Tables.lineitem(spark, sf01)
       .repartitionByRange(16, col("l_partkey"))
       .sortWithinPartitions(col("l_partkey"))
